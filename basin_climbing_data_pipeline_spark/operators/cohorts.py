@@ -2118,7 +2118,8 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref = txn.agg(F.max("txn_date").alias("ref_day"))
     # tracked cache: five consumers (tot + three rank vocabularies + the
     # score join) would otherwise each recompute the per-customer collapse
-    # — PLANSTATS showed the duplicated subtree as 21 shuffles / 14 BNLJ
+    # — tools/plan_report.py showed the duplicated subtree as 21 shuffles /
+    # 14 BNLJ
     per_cust = tracked_persist(
         txn.groupBy("customer_id")
         .agg(

@@ -1106,23 +1106,22 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     can drop or link it.  Output: one row per new doc with at least one
     band collision whose verified Jaccard clears JACCARD_THRESHOLD.
 
-    Scale shape: new-side bands (size ∝ batch) equi-join the stored band
-    index (at rest this is a bucketed table; no corpus² term anywhere);
-    verify joins run only on collided pairs; keep-best is one window over
-    the candidate set.
+    Scale shape: the cost is that of the materialized
+    :func:`minhash_lsh_pairs` build — the full-corpus band self-join plus
+    verification — amortized across every consumer of that table; this
+    query adds one scan of it and the keep-best window over the
+    candidate set.  Under ``SPARK_GRAFT_NO_MATERIALIZE`` (or on the first
+    build in a process) it pays that stored×stored band join itself,
+    the cost the batch-vs-stored mode was defined to avoid (SCALE.md).
 
-    ROUND-13 OPTIMIZATION (guide §5 — shared-intermediate reuse, the
-    round-12 cluster-labels discipline): the band join + shingle-index
-    verification here rebuilt EXACTLY the pair set the materialized
-    :func:`minhash_lsh_pairs` table already stores — band collision and
-    verified Jaccard are both symmetric, and that table carries every
+    Why a slice of the pairs table is exact: band collision and verified
+    Jaccard are both symmetric, and :func:`minhash_lsh_pairs` carries every
     collided pair (doc_a < doc_b) unfiltered with the same
-    n_band_collisions count and the same unpruned-shingle Jaccard.  The
-    new×stored candidate set is the mixed-orientation slice of it (a
-    new-new or stored-stored pair is excluded by the mod split exactly as
-    the two-sided band join excluded it), so this query is now a scan of
-    the pairs table + the keep-best window — the 23-Exchange
-    signature/verification subtree is gone (plans/r13)."""
+    n_band_collisions count and the same unpruned-shingle Jaccard a
+    two-sided new×stored band join would compute.  The new×stored
+    candidate set is the mixed-orientation slice of it (a new-new or
+    stored-stored pair is excluded by the mod split exactly as the
+    two-sided band join excluded it)."""
     from pyspark.sql import Window
 
     pairs = minhash_lsh_pairs(spark, sf_dir)

@@ -254,12 +254,11 @@ def overwrite_window_partitions(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        deduped.write.mode("overwrite").partitionBy(date_col).parquet(table_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # per-write option, not the session conf: concurrent writers share the
+    # session, and a static-mode overwrite would drop every other partition
+    deduped.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(date_col).parquet(table_dir)
     return spark.read.parquet(table_dir)
 
 
@@ -274,10 +273,14 @@ def snapshot_column(date_value: str) -> Column:
 
 
 def write_snapshot(df: DataFrame, path: str, snapshot_date: str) -> None:
-    """Monthly immutable snapshot as a date partition."""
+    """Monthly immutable snapshot as a date partition.  Replaces only its
+    own ``snapshot_date`` partition, so a re-run on the same date converges
+    while other dates' snapshots stay untouched."""
     df.withColumn("snapshot_date", snapshot_column(snapshot_date)).write.mode(
-        "append"
-    ).partitionBy("snapshot_date").parquet(path)
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy(
+        "snapshot_date"
+    ).parquet(path)
 
 
 # ---------------------------------------------------------------------------

@@ -5,65 +5,8 @@ SURVEY.md §2 registers its queries here; each callable takes
 ``(spark, sf_dir)`` and returns a DataFrame whose column names match the
 oracle SQL exactly (the driver sorts columns by name and value-hashes).
 
-Registration ORDER is deliberate: the driver verifies the first 50 entries
-per round, so each round rotates the window to re-verify whatever lacks a
-driver-green row at current code.  ROUND 6's window is set by the explicit
-``_ROUND6_WINDOW`` reorder at the bottom of this module (the last 15
-never-driver-checked entries, then everything touched after its last
-driver row, then the oldest-green freshness rotation); the block comments
-below record the round-4/5 rotations for provenance.  Round-4 rotation
-(both sessions):
-
-1. the 31 queries whose latest driver-green row is ROUND 2 (they sat
-   outside round 3's window while the shared io.py read/materialize path
-   changed underneath) — they register FIRST so `CORRECTNESS_r04.json`
-   re-greens them at current code;
-2. the round-4 additions that fit the window (merged_transactions_window,
-   streaming_sessions, expense_categories, bigram_repetition,
-   kmeans_refine, source_length_percentiles, ann_recall_eval,
-   minhash_error_eval, sequence_packing, incremental_dedup,
-   streaming_dedup_counts); the round-4 additions that did NOT fit
-   (decontamination, streaming_attribution_join, cluster_collapse_summary,
-   simhash_adaptive_near_pairs, corpus_funnel, quantization_error_eval,
-   and the third-session chunk_boilerplate / pii_scrub /
-   temperature_mixture_weights / cross_source_leakage /
-   hard_negative_mining / subword_token_stats /
-   streaming_static_enrichment / source_quality_cap /
-   training_shard_assignment / media_resize_features /
-   quantized_topk_recall / dedup_recall_eval / sliding_window_chunks /
-   mixture_epoch_plan, and the fourth-session containment_pairs /
-   vocab_coverage / tfidf_keywords / zipf_slope / hll_distinct_eval /
-   cms_heavy_hitters / bloom_join_prune / event_funnel /
-   histogram_quantiles / pagerank_proximity / triangle_stats /
-   markov_transitions / source_token_entropy / refund_metrics_long /
-   daily_anomalies / pmi_collocations, and the fifth-session
-   quality_rule_battery / unigram_logprob_quality /
-   sorted_neighborhood_pairs / revenue_pivot_by_category /
-   cogroup_spend_at_checkin / native_session_windows /
-   common_neighbor_recs / warehouse_constraint_audit / revenue_cube /
-   media_frame_sample / spend_deciles / changeset_merge /
-   retention_triangle / sketch_decile_assignment /
-   daily_revenue_locf / purchase_attribution /
-   category_basket_lift / spend_drift_psi /
-   visit_spend_correlation / experiment_conversion_ztest /
-   revenue_mom_growth / seasonal_naive_forecast_eval /
-   semantic_dedup / blocker_recall_eval / table_diff_audit /
-   visit_streaks) lead block 4.  That set now counts 62 entries — TWELVE more than the
-   50-slot window — so the round-5 rotation front-loads 50 of them
-   and rolls the remainder to round 6; roll the entries whose
-   machinery is already driven end-to-end by an in-window sibling
-   (quantization_error_eval and quantized_topk_recall share the
-   int8 path; media_resize_features rides the same mapInPandas
-   stage as media_frame_sample; cluster_collapse_summary and
-   dedup_recall_eval ride the driver-green minhash_lsh_pairs
-   index; corpus_funnel is a composition of driver-green stages);
-3. the rest of the window: queries whose source was touched in rounds
-   3-4, highest-risk first — the integer-micro signature rewrite
-   (lsh_buckets, embedding_near_dup_pairs), the leads/customers/dedup
-   round-4 refactors, the round-3 flags.py rewrite;
-4. outside the window: entries driver-green at code identical to HEAD's
-   for their path (per-entry rationale at each block comment), all
-   additionally full-check.py-green at HEAD in the round-4 session.
+Entries keep the order of the ``register`` calls below; nothing reorders
+them, and a name may be registered only once.
 """
 
 from __future__ import annotations
@@ -83,6 +26,7 @@ from .operators import leads as ld
 from .operators import linking as lk
 from .operators import multimodal as mm
 from .operators import quality as qa
+from .operators import retrieval as rt
 from .operators import sampling as sp
 from .operators import similarity as sim
 from .operators import sketches as sketch
@@ -91,6 +35,7 @@ from .operators import textstats as ts
 from .operators import events as ev
 from .operators import memberships as mem
 from .operators import transactions as txn
+from .sources import readers as rd
 from .streaming import events_stream as st
 from .streaming import stateful as stf
 
@@ -121,10 +66,7 @@ def register(name: str, fn: SparkQuery, sql: str | None) -> None:
     REGISTRY[name] = (wrapped, sql)
 
 
-# --- block 1 (window slots 1-31): last driver-green row is ROUND 2 --------
-# These rode outside the first-50 window in round 3 while the shared io.py
-# read/materialize path changed beneath them; they verify first so round 4
-# leaves every entry green at current code.
+# --- leads, linking, transactions and check-ins -----------------------------
 
 register("lead_timelines", ld.lead_timelines, ld.lead_timelines_sql())
 register("rsvp_party_attendees", ld.rsvp_party_attendees, ld.rsvp_party_attendees_sql())
@@ -174,11 +116,9 @@ register("trailing_window_counts", ev.trailing_window_counts, ev.trailing_window
 register("entry_method_counts", ev.entry_method_counts, ev.entry_method_counts_sql())
 register("daily_checkin_stats", ev.daily_checkin_stats, ev.daily_checkin_stats_sql())
 
-# --- block 2 (slots 32-41): new in round 4 (ann_recall_eval,
-# minhash_error_eval, sequence_packing and incremental_dedup are the
-# second-session additions: measured-quality evals for the approximate ANN
-# and MinHash paths, greedy training-sequence packing, and batch-vs-stored
-# incremental dedup) ---------------------------------------------------------
+# --- window merge, streaming sessions, and the measured-quality evals for
+# the approximate ANN and MinHash paths, greedy training-sequence packing
+# and batch-vs-stored incremental dedup -----------------------------------
 
 register(
     "merged_transactions_window",
@@ -205,13 +145,7 @@ register("sequence_packing", sp.sequence_packing, sp.sequence_packing_sql())
 register("incremental_dedup", dd.incremental_dedup, dd.incremental_dedup_sql())
 register("streaming_dedup_counts", st.streaming_dedup_counts, st.streaming_dedup_counts_sql())
 
-# --- block 3 (slots 43-50, the rest of the window): source touched in
-# rounds 3-4, highest-risk first.  lsh_buckets and embedding_near_dup_pairs
-# moved UP this session: the integer-micro signature vectorization
-# (_band_buckets) rewrote their code path, so they need a driver-green row
-# at current code.  leads.py (master/leads agg fusion), customers.py
-# (family materialization), dedup.py (tracked cache + label-propagation
-# refactor) carry the round-4a refactors.
+# --- embedding LSH, customer master, family links and near-dup dedup ------
 
 register("lsh_buckets", sim.lsh_buckets, sim.lsh_buckets_sql())
 register(
@@ -226,16 +160,9 @@ register("simhash_near_pairs", dd.simhash_near_pairs, dd.simhash_near_pairs_sql(
 register("dedup_clusters", dd.dedup_clusters, dd.dedup_clusters_sql())
 register("minhash_lsh_pairs", dd.minhash_lsh_pairs, dd.minhash_lsh_pairs_sql())
 
-# --- block 4 (outside the window): not driver-checked this round.
-# decontamination, streaming_attribution_join, cluster_collapse_summary,
-# simhash_adaptive_near_pairs (the production-width simhash, its width
-# derived from count(*) inside the oracle itself) and corpus_funnel are
-# NEW in the round-4 second session and register here because every
-# window slot is held by a query whose source changed in rounds 3-4: all
-# five are strict-check.py-green at HEAD, and the ROUND-5 rotation must
-# front-load them (they will be the only entries without any driver row).
-# Everything after them is driver-green at code identical to HEAD's for
-# its path, plus full-check.py-green at HEAD this session.
+# --- corpus curation: decontamination, stream attribution, cluster
+# collapse, the production-width simhash (its width derived from count(*)
+# inside the oracle itself), the curation funnel and int8 quantization -----
 
 register("decontamination", dd.decontamination, dd.decontamination_sql())
 register(
@@ -260,16 +187,12 @@ register(
     sim.quantization_error_eval_sql(),
 )
 
-# round-4 THIRD-session additions — same situation as the block above
-# (strict-check.py-green at HEAD, no window slot free): chunk-granularity
-# boilerplate audit, redaction scrub, temperature mixture weights,
-# cross-source leakage rollup, hard-negative mining, subword/fertility
-# token stats, stream-static dimension enrichment, per-source quality
-# caps, training shard assignment, the mapInPandas resize stage, the
-# int8 neighbor-set recall eval, the planted-near-dup recall eval,
-# sliding-window chunking, the mixture epoch plan.  The round-5
-# front-load set is therefore the twenty entries from `decontamination`
-# through `mixture_epoch_plan`.
+# chunk-granularity boilerplate audit, redaction scrub, temperature mixture
+# weights, cross-source leakage rollup, hard-negative mining,
+# subword/fertility token stats, stream-static dimension enrichment,
+# per-source quality caps, training shard assignment, the mapInPandas resize
+# stage, the int8 neighbor-set recall eval, the planted-near-dup recall
+# eval, sliding-window chunking, the mixture epoch plan
 register("chunk_boilerplate", dd.chunk_boilerplate, dd.chunk_boilerplate_sql())
 register("pii_scrub", ts.pii_scrub, ts.pii_scrub_sql())
 register(
@@ -309,11 +232,9 @@ register(
 )
 register("mixture_epoch_plan", sp.mixture_epoch_plan, sp.mixture_epoch_plan_sql())
 
-# round-4 FOURTH-session additions — same situation (strict-check.py-green
-# at HEAD, no window slot free; part of the round-5 front-load set):
 # shingle-containment dedup (doc-inside-doc, the case Jaccard misses),
-# vocabulary-coverage/OOV curve, tf-idf keyword extraction, and the Zipf
-# rank-frequency exponent.
+# vocabulary-coverage/OOV curve, tf-idf keyword extraction, the Zipf
+# rank-frequency exponent, sketches, graph and revenue reshapes
 register("containment_pairs", dd.containment_pairs, dd.containment_pairs_sql())
 register("vocab_coverage", ts.vocab_coverage, ts.vocab_coverage_sql())
 register("tfidf_keywords", ts.tfidf_keywords, ts.tfidf_keywords_sql())
@@ -331,9 +252,7 @@ register("refund_metrics_long", txn.refund_metrics_long, txn.refund_metrics_long
 register("daily_anomalies", co.daily_anomalies, co.daily_anomalies_sql())
 register("pmi_collocations", ts.pmi_collocations, ts.pmi_collocations_sql())
 
-# round-4 FIFTH-session additions — same situation (strict-check.py-green at
-# HEAD, no window slot free; part of the round-5 front-load set): the
-# Gopher-style hard-filter rule battery, the unigram-LM perplexity-proxy
+# the Gopher-style hard-filter rule battery, the unigram-LM perplexity-proxy
 # scorer, sorted-neighborhood dedup blocking (the sort-key complement to
 # the hash/LSH blockers), the PIVOT wide reshape (UNPIVOT's inverse), and
 # the cogrouped-applyInPandas as-of spend alignment (the last Pandas-UDF
@@ -411,15 +330,8 @@ register("blocker_recall_eval", dd.blocker_recall_eval, dd.blocker_recall_eval_s
 register("table_diff_audit", inc.table_diff_audit, inc.table_diff_audit_sql())
 register("visit_streaks", ev.visit_streaks, ev.visit_streaks_sql())
 
-# First the eight pushed out by this session's insertions: flags_build /
-# events_unified / flag_type_summary (flags.py was rewritten in round 3
-# and driver-greened at round-3 END — i.e. at exactly this code; untouched
-# in round 4), streaming_windowed_counts / streaming_sliding_counts
-# (streaming r3-green, untouched in r4; the in-window streaming_sessions
-# and streaming_dedup_counts drive the same stream source), cosine_topk /
-# knn_label_vote / ivf_cell_search (similarity.py paths untouched by the
-# r4 edits — _dot64/_cosine, not _band_buckets or the k-means assignment;
-# in-window ann_recall_eval drives cosine_topk end-to-end anyway).
+# --- flags, windowed streaming counts, exact cosine search, memberships,
+# customers, cohorts and the base text/dedup operators ---------------------
 
 register("flags_build", fl.build_flags, fl.build_flags_sql())
 register("streaming_windowed_counts", st.windowed_event_counts, st.windowed_event_counts_sql())
@@ -497,15 +409,9 @@ register("ngram_jaccard_pairs", dd.ngram_jaccard_pairs, dd.ngram_jaccard_pairs_s
 register("minhash_signatures", dd.minhash_signatures, dd.minhash_signatures_sql())
 register("simhash_signatures", dd.simhash_signatures, dd.simhash_signatures_sql())
 
-# round-5 additions (the ONLY two, per the round-4 review's stretch item —
-# everything else this round is verification-debt paydown): the S-family's
-# first oracle row, and the F3 applyInPandas escape hatch as a rows-only
-# driver check (its semantics are pinned by the pytest differential against
-# the native flags path; no oracle SQL because the per-customer sequential
-# rule replay is the point).  Both sit at slots 51-52 — round 6 front-loads
-# them with the 13 rolled entries.
-from .sources import readers as rd  # noqa: E402
-
+# the S-family's staged-catalog counts, and the F3 applyInPandas escape
+# hatch (its semantics are also pinned by the pytest differential against
+# the native flags path)
 register("catalog_table_counts", rd.catalog_table_counts, rd.catalog_table_counts_sql())
 register(
     "flags_via_applyinpandas",
@@ -513,8 +419,7 @@ register(
     fl.flags_via_applyinpandas_sql(),
 )
 
-# --- round-6 additions (registered AFTER the 50-slot window fills; their
-# driver rows land in round 7 — see _ROUND7_WINDOW_PLAN below) --------------
+# --- priority dedup, SCD2, retrieval evals, sampling and drift ------------
 
 register("source_priority_dedup", dd.source_priority_dedup, dd.source_priority_dedup_sql())
 register("membership_scd2", mem.membership_scd2, mem.membership_scd2_sql())
@@ -528,8 +433,6 @@ register(
     sim.mmr_diversified_topk,
     sim.mmr_diversified_topk_sql(),
 )
-
-from .operators import retrieval as rt  # noqa: E402
 
 register("bm25_topk", rt.bm25_topk, rt.bm25_topk_sql())
 register("repeated_ngram_coverage", dd.repeated_ngram_coverage, dd.repeated_ngram_coverage_sql())
@@ -564,8 +467,8 @@ register("markov_holdout_accuracy", co.markov_holdout_accuracy, co.markov_holdou
 register("linear_probe_quality", ts.linear_probe_quality, ts.linear_probe_quality_sql())
 register("k_anonymity_audit", qa.k_anonymity_audit, qa.k_anonymity_audit_sql())
 register("join_key_skew_audit", qa.join_key_skew_audit, qa.join_key_skew_audit_sql())
-# round-7 additions: windowed drift family (batch + streaming sibling),
-# pair-free embedding dispersion, Fellegi-Sunter linkage pattern table
+# windowed drift family (batch + streaming sibling), pair-free embedding
+# dispersion, Fellegi-Sunter linkage pattern table
 register(
     "record_linkage_patterns",
     cu.record_linkage_patterns,
@@ -650,10 +553,9 @@ register(
     st.streaming_value_drift_psi_sql(),
 )
 
-# --- round-8 additions (registered AFTER the 50-slot window fills; their
-# driver rows land in round 9) — the remaining reference dashboard charts
-# queryized (VERDICT r7 item 5; reference dashboard/dashboard.py:1402-2199),
-# each a composition of driver-green operators.  Marketing CPA
+# --- the remaining reference dashboard charts queryized (reference
+# dashboard/dashboard.py:1402-2199), each a composition of the operators
+# above.  Marketing CPA
 # (dashboard.py:1729) is the one chart NOT queryized: it reads the Facebook
 # Ads spend table, a source family with no engine sibling fixture — scoping
 # decision recorded in SURVEY §2.9 and README.
@@ -702,7 +604,7 @@ register(
     txn.camp_revenue_monthly,
     txn.camp_revenue_monthly_sql(),
 )
-# long-span Theil-Sen (round-7 judge item 6): same median, range-partitioned
+# long-span Theil-Sen: same median, range-partitioned
 # rank — no unpartitioned window over the days² pair frame; pytest pins
 # equality with the exact form
 register(
@@ -710,7 +612,7 @@ register(
     txn.theilsen_trend_bucketed,
     txn.theilsen_trend_bucketed_sql(),
 )
-# round-8 statistical wave: rank-based testing (the bucketed-prefix ranking
+# statistical battery: rank-based testing (the bucketed-prefix ranking
 # primitive from theilsen_trend_bucketed generalized to full prefix sums),
 # robust location, multiple-testing control, weekly seasonality, hazard,
 # and column profiling
@@ -801,283 +703,10 @@ register(
     ex.refund_test_power_mde_sql(),
 )
 
-
-# --- round-5 window rotation ----------------------------------------------
-# The driver verifies the FIRST 50 registry entries per round.  Round 5's
-# single job (per the round-4 review) is paying down verification debt: 62
-# entries had never had a driver row.  The window below is kmeans_refine
-# (red in round 4 for its array<bigint> output, now fixed to a serialized
-# string — must re-green first) followed by 49 of those 62.  The 13 that
-# roll to round 6 are exactly the ones whose machinery an in-window or
-# already-driver-green sibling drives end-to-end this round:
-#   quantization_error_eval / quantized_topk_recall — the int8 quantization
-#     path, checked together in round 6;
-#   media_resize_features — same mapInPandas stage as in-window
-#     media_frame_sample;
-#   cluster_collapse_summary / dedup_recall_eval — ride the r4-green
-#     minhash_lsh_pairs index;
-#   corpus_funnel — composition of driver-green stages;
-#   simhash_adaptive_near_pairs — sibling simhash_near_pairs r4-green;
-#   sketch_decile_assignment — rides in-window histogram_quantiles;
-#   refund_metrics_long / revenue_pivot_by_category / revenue_mom_growth —
-#     reshapes/lags of the r4-green revenue aggregates;
-#   retention_triangle — cohort machinery of driver-green
-#     conversion_cohorts;
-#   visit_spend_correlation — corr over two driver-green inputs.
-# Round 6 must front-load those 13 plus anything round 5 touched.  Touched
-# so far outside this window (latent zero-denominator guards, identical
-# output at every corpus the denominators are nonzero on — judge-re-
-# checkable via CHECKLOCAL.json at HEAD): revenue_by_month_category /
-# refund_metrics_by_category (+refund_metrics_long by composition),
-# merged_transactions_window (replace_bounded_window_merge gained an
-# opt-in version_col parameter; the default path it uses is unchanged).
-# io.py's materialized() write switched repartition->coalesce — a physical
-# layout change only; all 156 entries re-verified green at HEAD after it
-# (CHECKLOCAL.json), and every output is partition-independent by the
-# repo's determinism discipline (integer fixed-point, explicit tie-breaks).
-_ROUND6_WINDOW = [
-    # --- never driver-checked (15): the 13 entries rolled out of round
-    # 5's window plus round 5's two additions (catalog_table_counts;
-    # flags_via_applyinpandas, upgraded this round from rows-only to a
-    # full value-hash oracle).  A green row for each makes every registry
-    # entry driver-verified-ever — the judge's literal bar.
-    "quantization_error_eval",
-    "quantized_topk_recall",
-    "media_resize_features",
-    "cluster_collapse_summary",
-    "dedup_recall_eval",
-    "corpus_funnel",
-    "simhash_adaptive_near_pairs",
-    "sketch_decile_assignment",
-    "refund_metrics_long",
-    "revenue_pivot_by_category",
-    "revenue_mom_growth",
-    "retention_triangle",
-    "visit_spend_correlation",
-    "catalog_table_counts",
-    "flags_via_applyinpandas",
-    # --- code or oracle touched AFTER the entry's last driver-green row
-    # (20): round 5's zero-denominator guards (revenue/refund family,
-    # merged_transactions_window version_col), the streaming oracle's
-    # event_id-dedup mirror, the 837b93b fold_norm move (doc_fingerprints
-    # / exact_dedup), the f69c511 ASCII-space oracle-trim pin (textstats
-    # family, shingle CTE consumers, customers_build base CTE,
-    # expense_categories, sequence_packing), the 1426506 byte-exact
-    # media_features oracle, and this round's zipf_slope degenerate-fit
-    # guard.  All CHECKLOCAL-green at HEAD; the driver row refreshes each
-    # at code current for its path.
-    "revenue_by_month_category",
-    "refund_metrics_by_category",
-    "merged_transactions_window",
-    "streaming_windowed_counts",
-    "doc_fingerprints",
-    "exact_dedup",
-    "zipf_slope",
-    "token_frequencies",
-    "minhash_signatures",
-    "simhash_signatures",
-    "customers_build",
-    "expense_categories",
-    "doc_stats",
-    "language_id_confusion",
-    "bigram_repetition",
-    "sequence_packing",
-    "ngram_jaccard_pairs",
-    "minhash_error_eval",
-    "minhash_lsh_pairs",
-    "media_features",
-    # --- freshness rotation (15): the entries whose last driver row is
-    # oldest (round 3) and untouched since.  The 17 remaining round-3
-    # entries (checkins_membership_coverage, visits_before_first_membership,
-    # duplicate_emails, fuzzy_email_matches, identifiers_build,
-    # parent_contact_enrichment, customers_with_youth,
-    # purchasers_never_checked_in, conversion_cohorts, top_spenders,
-    # customer_mode_category, refund_distribution, family_day_pass_groups,
-    # members_minus_active_owners, parent_child_covisits,
-    # same_purchase_pairs, quality_buckets) lead round 7's rotation.
-    "flags_build",
-    "events_unified",
-    "flag_type_summary",
-    "streaming_sliding_counts",
-    "cosine_topk",
-    "knn_label_vote",
-    "ivf_cell_search",
-    "proximity_connections",
-    "returning_after_break",
-    "memberships_build",
-    "active_memberships_on_date",
-    "daily_active_timeline",
-    "revenue_projection",
-    "revenue_actual_plus_projected",
-    "membership_conversion_asof",
-]
-# --- round-7 window rotation ----------------------------------------------
-# The full, explicit 50-slot round-7 window (CORRECTNESS_r06 landed 50/50
-# green, so every entry that existed at round-5 close is driver-verified-
-# ever).  Composition, in priority order:
-#   * 27 front slots — the 25 round-6 additions (never driver-checked)
-#     plus two re-verifies: ann_recall_eval (its candidate block was
-#     refactored into the shared _lsh_query_candidates helper after its
-#     round-5 row) and media_resize_features (its oracle gained an
-#     empty-payload guard after its round-6 row);
-#   * 17 freshness slots — the round-3-green entries named in the
-#     rotation comment inside _ROUND6_WINDOW, untouched since, whose
-#     newest driver row is now four rounds old;
-#   * 6 fill slots — the oldest still-round-4 rows, taken in their
-#     CORRECTNESS_r04.json verification order (lead_timelines,
-#     rsvp_party_attendees, link_refunds, regex_key_enrichment,
-#     membership_flow, at_risk_report).
-# A green CORRECTNESS_r07 on this window makes all 181 registry entries
-# driver-verified-ever.
-_ROUND7_WINDOW = [
-    "source_priority_dedup",
-    "membership_scd2",
-    "data_questions",
-    "ann_ndcg_eval",
-    "bootstrap_spend_ci",
-    # ann_recall_eval: r5-green, but round 6 refactored its candidate
-    # block into the shared _lsh_query_candidates helper — re-verify
-    "ann_recall_eval",
-    # late round-6 additions (never driver-checked)
-    "dsir_selection",
-    "soft_dedup_weights",
-    "mmr_diversified_topk",
-    "bm25_topk",
-    "repeated_ngram_coverage",
-    "gram_novelty_by_source",
-    "stratified_sample_alloc",
-    "weighted_reservoir_sample",
-    "embedding_centroid_drift",
-    "ewma_daily_revenue",
-    "ivf_probe_recall_sweep",
-    "streaming_weighted_sample",
-    "pq_codebook_eval",
-    "cross_source_dup_matrix",
-    "bigram_interp_logprob",
-    "cusum_revenue_drift",
-    "markov_holdout_accuracy",
-    "linear_probe_quality",
-    "k_anonymity_audit",
-    "join_key_skew_audit",
-    # oracle changed AFTER its round-6 driver row (empty-payload guard,
-    # the capstone catch) — re-verify
-    "media_resize_features",
-    # --- freshness rotation (17): last driver row is round 3, code
-    # untouched since — the oldest green rows in the registry.
-    "checkins_membership_coverage",
-    "visits_before_first_membership",
-    "duplicate_emails",
-    "fuzzy_email_matches",
-    "identifiers_build",
-    "parent_contact_enrichment",
-    "customers_with_youth",
-    "purchasers_never_checked_in",
-    "conversion_cohorts",
-    "top_spenders",
-    "customer_mode_category",
-    "refund_distribution",
-    "family_day_pass_groups",
-    "members_minus_active_owners",
-    "parent_child_covisits",
-    "same_purchase_pairs",
-    "quality_buckets",
-    # --- fill (6): oldest round-4 rows, in CORRECTNESS_r04.json order.
-    "lead_timelines",
-    "rsvp_party_attendees",
-    "link_refunds",
-    "regex_key_enrichment",
-    "membership_flow",
-    "at_risk_report",
-]
-
-# ROUND 8's verification window (CORRECTNESS_r07 landed 50/50 green on the
-# round-7 window above, making all 181 pre-round-7 entries driver-verified-
-# ever).  Composition, in priority order:
-#   * 35 front slots (_ROUND8_FRONT) — the 23 round-7 additions (never
-#     driver-checked), then the re-verifies whose code was touched after
-#     their last driver row and that sat OUTSIDE the round-7 window: the
-#     shared-helper refactors (language_id_confusion's argmax →
-#     _lang_detected; hll_distinct_eval's estimator →
-#     _hll_scaled_registers/_hll_estimate_col; spend_deciles /
-#     sketch_decile_assignment's cut derivation → sketch_decile_cuts) and
-#     the eight streaming entries that now drain through _await_finished
-#     (a failure-path-only change, re-verified as cheap insurance);
-#   * 15 fill slots (_ROUND8_FILL) — the oldest driver-green rows in the
-#     registry: every non-front entry's newest driver row is round 4 or
-#     later, so these are the first 15 round-4-green entries in their
-#     CORRECTNESS_r04.json verification order.
-# A green CORRECTNESS_r08 on this window made all 204 PRE-round-8 entries
-# driver-verified-ever (the registry holds 232 at round-8 close; the 28
-# round-8 additions rotate through _ROUND9_WINDOW below).  CORRECTNESS_r08
-# landed 50/50 green, so that milestone is met.
-_ROUND8_FRONT = [
-    # round-7 additions (23, never driver-checked)
-    "value_drift_psi",
-    "streaming_value_drift_psi",
-    "embedding_dispersion_by_label",
-    "record_linkage_patterns",
-    "lang_id_kappa",
-    "streaming_window_distinct_users",
-    "interevent_burstiness",
-    "cluster_safe_split",
-    "woe_iv_by_feature",
-    "l_diversity_audit",
-    "hybrid_rrf_retrieval",
-    "label_propagation_communities",
-    "quality_dup_lift",
-    "probe_conformal_calibration",
-    "membership_survival_km",
-    "cuped_variance_reduction",
-    "survival_logrank_by_frequency",
-    "markov_absorption_probs",
-    "theilsen_revenue_trend",
-    "sliding_distinct_users_hll",
-    "eb_shrunk_source_quality",
-    "membership_attrition_monthly",
-    "active_memberships_new_vs_existing",
-    # shared-helper refactors after last driver row (4)
-    "language_id_confusion",
-    "hll_distinct_eval",
-    "spend_deciles",
-    "sketch_decile_assignment",
-    # _await_finished drain-path touch, outside the round-7 window (8)
-    "streaming_windowed_counts",
-    "streaming_sliding_counts",
-    "streaming_dedup_counts",
-    "streaming_sessions",
-    "streaming_attribution_join",
-    "streaming_static_enrichment",
-    "native_session_windows",
-    "changeset_merge",
-]
-# Fill slots: oldest driver-green rows.  Every non-front registry entry's
-# newest CORRECTNESS row is round 4+; the 15 oldest are these round-4 rows,
-# listed in CORRECTNESS_r04.json verification order.
-_ROUND8_FILL = [
-    "salted_user_spend",
-    "experiment_entries",
-    "pass_transfer_name_links",
-    "timeline_json_parse",
-    "train_test_split",
-    "mixture_sample_summary",
-    "period_snapshots",
-    "checkin_sessions",
-    "transactions_build",
-    "day_pass_counts_by_month",
-    "suspicious_price_bands",
-    "revenue_by_source",
-    "accounting_groups",
-    "revenue_by_region",
-    "dedup_transactions",
-]
-_ROUND8_WINDOW = _ROUND8_FRONT + _ROUND8_FILL
-
-# --- round-9 additions (registered AFTER the 50-slot window fills; their
-# driver rows land in round 10 via _ROUND10_FRONT) — time-series battery
-# over the zero-filled global daily revenue series: the "is there
-# structure" pre-flight (ACF + Ljung-Box), the classical decomposition,
-# the "when did it shift" locator, and the adaptive-reference drift
-# monitor.  All share ewma/holt's scale shape: one daily shuffle, then
+# --- time-series battery over the zero-filled global daily revenue series:
+# the "is there structure" pre-flight (ACF + Ljung-Box), the classical
+# decomposition, the "when did it shift" locator, and the adaptive-reference
+# drift monitor.  All share ewma/holt's scale shape: one daily shuffle, then
 # calendar-bounded frames.
 register("daily_revenue_acf", txn.daily_revenue_acf, txn.daily_revenue_acf_sql())
 register(
@@ -1119,7 +748,7 @@ register(
 register(
     "cochran_armitage_trend", ex.cochran_armitage_trend, ex.cochran_armitage_trend_sql()
 )
-# second round-9 batch: survival area, dispersion audit, multi-touch credit,
+# survival area, dispersion audit, multi-touch credit,
 # coverage estimation, text readability
 register("rmst_membership", mem.rmst_membership, mem.rmst_membership_sql())
 register("overdispersion_check", ev.overdispersion_check, ev.overdispersion_check_sql())
@@ -1134,7 +763,7 @@ register(
     qa.capture_recapture_population_sql(),
 )
 register("readability_scores", ts.readability_scores, ts.readability_scores_sql())
-# third round-9 batch: corpus-curation diagnostics (threshold sweep, split
+# corpus-curation diagnostics (threshold sweep, split
 # representativeness, length drift, format profile, retriever agreement,
 # embedding-norm health)
 register(
@@ -1149,7 +778,7 @@ register(
     rt.retrieval_rank_agreement,
     rt.retrieval_rank_agreement_sql(),
 )
-# fourth round-9 batch: dedup-cluster spectrum, mixture budget planning,
+# dedup-cluster spectrum, mixture budget planning,
 # peeking-safe sequential testing
 register(
     "cluster_size_distribution",
@@ -1159,7 +788,7 @@ register(
 register("mixture_budget_curve", sp.mixture_budget_curve, sp.mixture_budget_curve_sql())
 register("sequential_probe_obf", ex.sequential_probe_obf, ex.sequential_probe_obf_sql())
 register("dedup_weight_ess", sp.dedup_weight_ess, sp.dedup_weight_ess_sql())
-# fifth round-9 batch: vocabulary growth, revenue concentration tiers,
+# vocabulary growth, revenue concentration tiers,
 # activity cube, streaming mix-drift
 register("heaps_law_fit", ts.heaps_law_fit, ts.heaps_law_fit_sql())
 register(
@@ -1167,12 +796,12 @@ register(
 )
 register("activity_heatmap", ev.activity_heatmap, ev.activity_heatmap_sql())
 register("streaming_jsd_drift", st.streaming_jsd_drift, st.streaming_jsd_drift_sql())
-# sixth round-9 batch: the k-group test pair (parametric + rank-based)
+# the k-group test pair (parametric + rank-based)
 register(
     "anova_spend_by_segment", ex.anova_spend_by_segment, ex.anova_spend_by_segment_sql()
 )
 register("kruskal_wallis_spend", ex.kruskal_wallis_spend, ex.kruskal_wallis_spend_sql())
-# seventh round-9 batch: inference-battery round-out — the parametric
+# inference-battery round-out — the parametric
 # two-group member, single-pass extreme screen
 register("welch_ttest_spend", ex.welch_ttest_spend, ex.welch_ttest_spend_sql())
 register("grubbs_spend_outlier", ex.grubbs_spend_outlier, ex.grubbs_spend_outlier_sql())
@@ -1182,7 +811,7 @@ register(
 register(
     "permutation_test_spend", ex.permutation_test_spend, ex.permutation_test_spend_sql()
 )
-# eighth round-9 batch: daily-series diagnostics (normality, residual
+# daily-series diagnostics (normality, residual
 # autocorrelation, sign-pattern randomness)
 register(
     "jarque_bera_daily_revenue",
@@ -1193,16 +822,14 @@ register(
     "durbin_watson_revenue", txn.durbin_watson_revenue, txn.durbin_watson_revenue_sql()
 )
 register("runs_test_revenue", txn.runs_test_revenue, txn.runs_test_revenue_sql())
-# ninth round-9 batch: grouped-jackknife corpus-sensitivity audit
+# grouped-jackknife corpus-sensitivity audit
 register(
     "jackknife_source_mean", ts.jackknife_source_mean, ts.jackknife_source_mean_sql()
 )
 
-# round-10 additions (depth round: each is a driver-checked consumer of a
-# DISTINCT mode of the consolidated sketches.bucketed_prefix_rank —
-# plain (wilcoxon |d| ranks), inclusive dual-measure (CvM cumulative
-# ECDFs), and partitioned rank-pick (per-segment quantiles) — so the
-# round-10 consolidation's three code paths all carry driver-green rows)
+# one consumer per mode of sketches.bucketed_prefix_rank: plain (wilcoxon
+# |d| ranks), inclusive dual-measure (CvM cumulative ECDFs), and
+# partitioned rank-pick (per-segment quantiles)
 register(
     "wilcoxon_signed_rank_spend",
     ex.wilcoxon_signed_rank_spend,
@@ -1214,622 +841,6 @@ register(
     co.segment_spend_quantiles,
     co.segment_spend_quantiles_sql(),
 )
-
-# ROUND-9 WINDOW (the 50 registry slots the driver verifies this round).
-# CORRECTNESS_r08 landed 50/50 green, so the staged plan is now code:
-#   * 28 front slots (_ROUND9_FRONT) — the round-8 additions, never
-#     driver-checked.  A green CORRECTNESS_r09 on them reaches the
-#     232/232 driver-verified-ever milestone.  Three of them
-#     (mann_whitney_spend_utest, trimmed_winsorized_spend,
-#     gini_spend_concentration) had a round-9 cast-before-multiply
-#     overflow hardening (ADVICE r8) — sitting inside this window means
-#     the hardened code is exactly what the driver verifies.
-#   * 22 fill slots (_ROUND9_FILL) — the oldest driver-green rows in the
-#     registry: the round-4-green entries outside the round-8 window, in
-#     CORRECTNESS_r04.json verification order.
-# No re-verifies are owed beyond the fill: every round-8 source change
-# sat inside the round-8 window, and round-9 source changes either sit
-# inside this window or are tracked in _ROUND10_OWED below.
-_ROUND9_FRONT = [
-    "youth_teams_daily_active",
-    "intro_offer_conversion_timeline",
-    "intro_offer_conversion_summary",
-    "birthday_party_participants",
-    "birthday_party_revenue",
-    "fitness_revenue_monthly",
-    "fitness_class_attendance",
-    "camp_session_purchases",
-    "camp_revenue_monthly",
-    "theilsen_trend_bucketed",
-    "mann_whitney_spend_utest",
-    "bh_fdr_category_tests",
-    "trimmed_winsorized_spend",
-    "weekday_seasonality",
-    "churn_hazard_by_tenure",
-    "column_profile_audit",
-    "gini_spend_concentration",
-    "spearman_visit_spend",
-    "chisq_category_source",
-    "benford_amount_audit",
-    "ks_spend_test",
-    "mutual_info_category_source",
-    "embedding_top_component",
-    "streaming_benford_drift",
-    "feature_auc_screening",
-    "robust_daily_anomalies",
-    "holt_linear_daily_revenue",
-    "refund_test_power_mde",
-]
-# Fill slots: oldest driver-green rows — round-4-green entries outside the
-# round-8 window, in CORRECTNESS_r04.json verification order.
-_ROUND9_FILL = [
-    "checkins_build",
-    "visit_numbers",
-    "rolling_60d_visits",
-    "recency_buckets",
-    "trailing_window_counts",
-    "entry_method_counts",
-    "daily_checkin_stats",
-    "source_length_percentiles",
-    "incremental_dedup",
-    "lsh_buckets",
-    "embedding_near_dup_pairs",
-    "customer_master",
-    "leads_table",
-    "family_relationships",
-    "simhash_near_pairs",
-    "dedup_clusters",
-    "kmeans_refine",
-    "decontamination",
-    "chunk_boilerplate",
-    "pii_scrub",
-    "temperature_mixture_weights",
-    "cross_source_leakage",
-]
-_ROUND9_WINDOW = _ROUND9_FRONT + _ROUND9_FILL
-
-_r9_missing = [n for n in _ROUND9_WINDOW if n not in REGISTRY]
-if _r9_missing:
-    raise ValueError(f"round-9 window names not in registry: {_r9_missing}")
-if len(set(_ROUND9_FRONT)) != len(_ROUND9_FRONT):
-    raise ValueError("round-9 front list contains duplicates")
-if set(_ROUND9_FRONT) & set(_ROUND8_WINDOW):
-    raise ValueError("round-9 front names overlap the round-8 window")
-if len(_ROUND9_WINDOW) != 50:
-    raise ValueError(f"round-9 window must fill exactly 50 slots, got {len(_ROUND9_WINDOW)}")
-if len(set(_ROUND9_WINDOW)) != len(_ROUND9_WINDOW):
-    raise ValueError("round-9 window contains duplicate entries")
-
-# STAGED for round 10: new round-9 registry additions (front of the next
-# window) plus entries whose source changed in round 9 AFTER their last
-# driver-green row and which do NOT sit inside the round-9 window (owed
-# re-verifies).  The rotation-arithmetic guard below fails the build the
-# moment additions + owed re-verifies outrun the 50-slot window — debt
-# must never compound silently (judge order, round 8 verdict #4).
-# Round-9 close: 45 front + 5 owed = 50 slots — the window is FULL, so no
-# further registry additions can ship in round 9 (the guard below would
-# throw).  Round 10 therefore verifies exactly this window with zero fill.
-_ROUND10_FRONT: list[str] = [
-    # round-9 time-series battery (never driver-checked)
-    "daily_revenue_acf",
-    "seasonal_decomposition_daily",
-    "revenue_changepoint",
-    "page_hinkley_revenue_drift",
-    "nelson_aalen_hazard",
-    "km_greenwood_ci",
-    "rfm_segments",
-    "funnel_step_latency",
-    "ltv_triangle",
-    "jsd_source_categories",
-    "hll_source_overlap",
-    "linkage_em_step",
-    "lang_id_macro_f1",
-    "semantic_decontamination",
-    "tukey_category_outliers",
-    "cochran_armitage_trend",
-    "rmst_membership",
-    "overdispersion_check",
-    "position_based_attribution",
-    "capture_recapture_population",
-    "readability_scores",
-    "near_dup_threshold_sweep",
-    "source_length_ks",
-    "format_marker_rates",
-    "split_token_jsd",
-    "embedding_norm_audit",
-    "retrieval_rank_agreement",
-    "cluster_size_distribution",
-    "mixture_budget_curve",
-    "sequential_probe_obf",
-    "dedup_weight_ess",
-    "heaps_law_fit",
-    "revenue_pareto_shares",
-    "activity_heatmap",
-    "streaming_jsd_drift",
-    "anova_spend_by_segment",
-    "kruskal_wallis_spend",
-    "welch_ttest_spend",
-    "grubbs_spend_outlier",
-    "levene_brown_forsythe",
-    "permutation_test_spend",
-    "jarque_bera_daily_revenue",
-    "durbin_watson_revenue",
-    "runs_test_revenue",
-    "jackknife_source_mean",
-]
-_ROUND10_OWED: list[str] = [
-    # round-9 guarded-micro hardening (engine + oracle switched to the
-    # shared overflow-guarded quantizer; bitwise-identical at sf0.01,
-    # semantics differ only past |x| ≥ 1e12 — re-verify next window)
-    "linear_probe_quality",
-    "eb_shrunk_source_quality",
-    # HLL estimate family: same hardening pass (saturated-register
-    # estimates are unbounded statistics, the floor→LONG class)
-    "hll_distinct_eval",
-    "sliding_distinct_users_hll",
-    "streaming_window_distinct_users",
-]
-_WINDOW_SLOTS = 50
-if len(_ROUND10_FRONT) + len(_ROUND10_OWED) > _WINDOW_SLOTS:
-    raise ValueError(
-        "round-10 staging over budget: "
-        f"{len(_ROUND10_FRONT)} additions + {len(_ROUND10_OWED)} owed re-verifies "
-        f"> {_WINDOW_SLOTS} window slots — stop adding entries or queryize fewer"
-    )
-_r10_missing = [n for n in _ROUND10_FRONT + _ROUND10_OWED if n not in REGISTRY]
-if _r10_missing:
-    raise ValueError(f"round-10 staged names not in registry: {_r10_missing}")
-if set(_ROUND10_OWED) & set(_ROUND9_WINDOW):
-    raise ValueError(
-        "round-10 owed re-verifies overlap the round-9 window — an entry "
-        "inside the current window is verified this round and owes nothing"
-    )
-
-# ROUND-10 WINDOW (the 50 registry slots the driver verifies this round).
-# CORRECTNESS_r09 landed 50/50 green on exactly _ROUND9_WINDOW, reaching the
-# 232/232 driver-verified-ever milestone, so the staged plan rotates in:
-#   * 45 front slots (_ROUND10_FRONT) — the round-9 additions, never
-#     driver-checked.  A green CORRECTNESS_r10 on them reaches 277/277
-#     driver-verified-ever: every registry entry that exists at round-9
-#     close carries a driver-green row.
-#   * 5 owed slots (_ROUND10_OWED) — the round-9 guarded-micro/HLL
-#     hardening sites whose source changed after their last driver-green
-#     row (round-8 verdict order: debt never compounds silently).
-# The window is exactly full with zero fill; the judge independently
-# re-verified all 50 slots bitwise-green at sf0.01 at round-9 HEAD.
-_ROUND10_WINDOW = _ROUND10_FRONT + _ROUND10_OWED
-if len(_ROUND10_WINDOW) != 50:
-    raise ValueError(
-        f"round-10 window must fill exactly 50 slots, got {len(_ROUND10_WINDOW)}"
-    )
-if len(set(_ROUND10_WINDOW)) != len(_ROUND10_WINDOW):
-    raise ValueError("round-10 window contains duplicate entries")
-if set(_ROUND10_FRONT) & set(_ROUND9_WINDOW):
-    raise ValueError("round-10 front names overlap the round-9 window")
-
-# STAGED for round 11: new round-10 registry additions (front of the next
-# window) plus entries whose source changed in round 10 AFTER their last
-# driver-green row and which do NOT sit inside the round-10 window (owed
-# re-verifies).  The judge's round-9 order shifts the growth budget from
-# breadth to depth: round-10 additions are capped at 20 so freed slots can
-# absorb re-verifies of the log-bucket-rank consolidation touches.
-# NOTE(round-11 candidate): the `dec = lambda c: c.cast("decimal(38,0)")`
-# overflow-discipline lambda has 36 inline copies across the operators —
-# the next consolidation target (a shared functions/money.py `dec38()`),
-# deliberately deferred from round 10 because rewriting ~30 driver-green
-# out-of-window entries would consume most of a verification window as
-# owed re-verifies in one round.  Unlike the log-bucket primitive it is a
-# one-expression alias with no fencepost choices, so the drift risk is
-# low; schedule it when a window has matching slack.
-_ROUND11_FRONT: list[str] = [
-    "wilcoxon_signed_rank_spend",
-    "cvm_spend_test",
-    "segment_spend_quantiles",
-]
-_ROUND11_OWED: list[str] = [
-    # round-10 log-bucket-rank consolidation (judge order, round-9 verdict
-    # #2): the 14 inline sign-aware bucket/prefix-rank copies now call
-    # sketches.log_bucket / bucketed_prefix_rank / log_bucket_sql.  Every
-    # touched query re-verified bitwise-green at sf0.01 in-session; these
-    # are the touched entries OUTSIDE the round-10 window whose last
-    # driver-green row predates the rewrite.
-    "theilsen_trend_bucketed",
-    "trimmed_winsorized_spend",
-    "gini_spend_concentration",
-    "spearman_visit_spend",
-    "mann_whitney_spend_utest",
-    "ks_spend_test",
-    "spend_deciles",
-    "sketch_decile_assignment",
-    "spend_drift_psi",
-    "value_drift_psi",
-    "streaming_value_drift_psi",
-]
-if len(_ROUND11_FRONT) + len(_ROUND11_OWED) > _WINDOW_SLOTS:
-    raise ValueError(
-        "round-11 staging over budget: "
-        f"{len(_ROUND11_FRONT)} additions + {len(_ROUND11_OWED)} owed re-verifies "
-        f"> {_WINDOW_SLOTS} window slots — stop adding entries or queryize fewer"
-    )
-if len(_ROUND11_FRONT) > 20:
-    raise ValueError(
-        "round-11 additions capped at 20 (judge order, round-9 verdict #6: "
-        f"depth over breadth) — got {len(_ROUND11_FRONT)}"
-    )
-_r11_missing = [n for n in _ROUND11_FRONT + _ROUND11_OWED if n not in REGISTRY]
-if _r11_missing:
-    raise ValueError(f"round-11 staged names not in registry: {_r11_missing}")
-if set(_ROUND11_OWED) & set(_ROUND10_WINDOW):
-    raise ValueError(
-        "round-11 owed re-verifies overlap the round-10 window — an entry "
-        "inside the current window is verified this round and owes nothing"
-    )
-
-# Round-11 FILL: the dec38 consolidation re-verifies.  Round 11 executed the
-# staged candidate (the ~39 inline `dec = lambda c: c.cast("decimal(38,0)")`
-# copies plus the per-factor `(xd * yd).cast(...)` product idiom are now ONE
-# pair of shared helpers, functions/money.py::dec38/dec38_prod, property-
-# tested against exact python ints and DuckDB HUGEINT at the int64 corners
-# in tests/test_property_dec38.py).  These are the touched driver-green
-# entries OUTSIDE the staged 14 (the other 8 touched entries already sit in
-# _ROUND11_FRONT/_ROUND11_OWED: 6 owed plus wilcoxon_signed_rank_spend and
-# cvm_spend_test in front) — exactly 36, so the consolidation's whole
-# re-verify debt lands inside THIS round's window and round 12 starts owed-
-# free.  All 36 re-verified bitwise-green at sf0.01 in-session post-rewrite.
-_ROUND11_FILL: list[str] = [
-    "mixture_budget_curve",
-    "dedup_weight_ess",
-    "zipf_slope",
-    "linear_probe_quality",
-    "lang_id_kappa",
-    "probe_conformal_calibration",
-    "feature_auc_screening",
-    "source_length_ks",
-    "heaps_law_fit",
-    "cluster_size_distribution",
-    "theilsen_revenue_trend",
-    "weekday_seasonality",
-    "holt_linear_daily_revenue",
-    "daily_revenue_acf",
-    "revenue_changepoint",
-    "page_hinkley_revenue_drift",
-    "jarque_bera_daily_revenue",
-    "durbin_watson_revenue",
-    "runs_test_revenue",
-    "rmst_membership",
-    "visit_spend_correlation",
-    "revenue_pareto_shares",
-    "cuped_variance_reduction",
-    "cochran_armitage_trend",
-    "anova_spend_by_segment",
-    "kruskal_wallis_spend",
-    "welch_ttest_spend",
-    "grubbs_spend_outlier",
-    "levene_brown_forsythe",
-    "permutation_test_spend",
-    "interevent_burstiness",
-    "overdispersion_check",
-    "linkage_em_step",
-    "embedding_dispersion_by_label",
-    "embedding_top_component",
-    "embedding_norm_audit",
-]
-
-# STAGED for round 12: empty at round-11 close.  The dec38 consolidation's
-# entire re-verify debt landed INSIDE the round-11 window (_ROUND11_FILL),
-# and round 11 adds no registry entries — so for the first time the next
-# round starts with zero never-verified entries AND zero owed re-verifies.
-# The guards stay: any round-11 edit to an out-of-window driver-green entry
-# must append here in the same commit (window-rotation discipline).
-_ROUND12_FRONT: list[str] = []
-_ROUND12_OWED: list[str] = [
-    # round-11 guarded_long hardening (functions/money.py): the seeded
-    # random-events corpus caught the bare floor→long saturation class in
-    # _value_bucket (log_bucket's +1 then threw under ANSI); the fix also
-    # guards the A-ES sampling key and the streaming Benford micro-int.
-    # value_drift_psi / streaming_value_drift_psi sit INSIDE the round-11
-    # window (owed slots) and so re-verify this round; these two touched
-    # consumers do not:
-    "streaming_weighted_sample",
-    "streaming_benford_drift",
-    # round-11 nullif fix: no-match regexp_extract is '' on Spark and ANSI
-    # CAST('' AS BIGINT) throws — caught by capstone seed 31337's random
-    # events (props without a "k: N" match); values unchanged on matching
-    # corpora, re-verified bitwise at sf0.01 and on the catching corpus.
-    "regex_key_enrichment",
-]
-if len(_ROUND12_FRONT) + len(_ROUND12_OWED) > _WINDOW_SLOTS:
-    raise ValueError(
-        "round-12 staging over budget: "
-        f"{len(_ROUND12_FRONT)} additions + {len(_ROUND12_OWED)} owed re-verifies "
-        f"> {_WINDOW_SLOTS} window slots — stop adding entries or queryize fewer"
-    )
-if len(_ROUND12_FRONT) > 20:
-    raise ValueError(
-        "round-12 additions capped at 20 (judge order, round-9 verdict #6: "
-        f"depth over breadth) — got {len(_ROUND12_FRONT)}"
-    )
-_r12_missing = [n for n in _ROUND12_FRONT + _ROUND12_OWED if n not in REGISTRY]
-if _r12_missing:
-    raise ValueError(f"round-12 staged names not in registry: {_r12_missing}")
-
-# Round-12 FILL: staleness rotation (judge order, round-11 verdict #1).
-# With zero never-verified entries and only 3 owed re-verifies, the 47 free
-# slots systematically refresh verified-ever into verified-recently: the
-# fill is every non-owed entry ordered by OLDEST last driver-green row
-# first (ties broken by registry definition order), computed from
-# CORRECTNESS_r01..r11.  That selects all 36 entries whose last green row
-# dates to round 5 plus the 11 oldest round-6 rows; the next-stalest tier
-# (remaining round-6 rows) heads the round-13 fill candidate list.  All 47
-# re-verified bitwise-green at sf0.01 in-session before staging.
-_ROUND12_FILL: list[str] = [
-    "hard_negative_mining",
-    "subword_token_stats",
-    "source_quality_cap",
-    "training_shard_assignment",
-    "sliding_window_chunks",
-    "mixture_epoch_plan",
-    "containment_pairs",
-    "vocab_coverage",
-    "tfidf_keywords",
-    "cms_heavy_hitters",
-    "bloom_join_prune",
-    "event_funnel",
-    "histogram_quantiles",
-    "pagerank_proximity",
-    "triangle_stats",
-    "markov_transitions",
-    "source_token_entropy",
-    "daily_anomalies",
-    "pmi_collocations",
-    "quality_rule_battery",
-    "unigram_logprob_quality",
-    "sorted_neighborhood_pairs",
-    "cogroup_spend_at_checkin",
-    "common_neighbor_recs",
-    "warehouse_constraint_audit",
-    "revenue_cube",
-    "media_frame_sample",
-    "daily_revenue_locf",
-    "purchase_attribution",
-    "category_basket_lift",
-    "experiment_conversion_ztest",
-    "seasonal_naive_forecast_eval",
-    "semantic_dedup",
-    "blocker_recall_eval",
-    "table_diff_audit",
-    "visit_streaks",
-    "media_features",
-    "revenue_by_month_category",
-    "refund_metrics_by_category",
-    "merged_transactions_window",
-    "expense_categories",
-    "bigram_repetition",
-    "minhash_error_eval",
-    "sequence_packing",
-    "minhash_lsh_pairs",
-    "cluster_collapse_summary",
-    "simhash_adaptive_near_pairs",
-]
-
-# STAGED for round 13: any round-12 edit to a driver-green entry OUTSIDE
-# the round-12 window must append to _ROUND13_OWED in the same commit
-# (window-rotation discipline); new registry additions go to
-# _ROUND13_FRONT (capped at 20).
-_ROUND13_FRONT: list[str] = [
-    # round-12 addition: the event-time-timeout sessionizer's deterministic
-    # driver surface (gap-closed + watermark-flushed sessions; ST6 deepened)
-    "streaming_sessions_flush",
-]
-_ROUND13_OWED: list[str] = [
-    # Round-12 optimization rewrites that landed OUTSIDE the round-12
-    # window (r12 verdict order #1: every path restructured in round 12
-    # must be driver re-verified in round 13).  All 23 were bitwise-green
-    # in the builder's own full-registry sweeps (CHECKR12_SF001 /
-    # CHECKR12_CAPSTONE); this list puts them back under the driver's
-    # oracle.  With _ROUND13_FRONT's streaming_sessions_flush that covers
-    # all 24 round-12-rewritten query paths.
-    "embedding_top_component",
-    "theilsen_revenue_trend",
-    "ivf_probe_recall_sweep",
-    "kmeans_refine",
-    "column_profile_audit",
-    "label_propagation_communities",
-    "corpus_funnel",
-    # the materialized cluster-labels family (consumers of _cluster_labels
-    # and exact_canonical_ids; cluster_collapse_summary and
-    # blocker_recall_eval were in the round-12 window already):
-    "dedup_clusters",
-    "cluster_size_distribution",
-    "soft_dedup_weights",
-    "source_priority_dedup",
-    "dedup_weight_ess",
-    "quality_dup_lift",
-    "cluster_safe_split",
-    "dsir_selection",
-    "mmr_diversified_topk",
-    "lead_timelines",
-    "timeline_json_parse",
-    "flags_via_applyinpandas",
-    "probe_conformal_calibration",
-    "tukey_category_outliers",
-    "hybrid_rrf_retrieval",
-    "streaming_sessions",
-]
-if len(_ROUND13_FRONT) + len(_ROUND13_OWED) > _WINDOW_SLOTS:
-    raise ValueError(
-        "round-13 staging over budget: "
-        f"{len(_ROUND13_FRONT)} additions + {len(_ROUND13_OWED)} owed re-verifies "
-        f"> {_WINDOW_SLOTS} window slots — stop adding entries or queryize fewer"
-    )
-if len(_ROUND13_FRONT) > 20:
-    raise ValueError(
-        "round-13 additions capped at 20 (judge order, round-9 verdict #6: "
-        f"depth over breadth) — got {len(_ROUND13_FRONT)}"
-    )
-_r13_missing = [n for n in _ROUND13_FRONT + _ROUND13_OWED if n not in REGISTRY]
-if _r13_missing:
-    raise ValueError(f"round-13 staged names not in registry: {_r13_missing}")
-
-# Round-13 FILL: staleness rotation continued (judge order, round-11
-# verdict #1).  26 free slots go to the OLDEST last-driver-green entries
-# (ties broken by registry definition order), computed from
-# CORRECTNESS_r01..r12: the stalest tier is the 30 entries whose last
-# green row dates to round 6; these are its first 26.  The remaining 4
-# round-6 rows (ngram_jaccard_pairs, minhash_signatures,
-# simhash_signatures, catalog_table_counts) head the round-14 fill
-# candidate list.
-_ROUND13_FILL: list[str] = [
-    "quantization_error_eval",
-    "quantized_topk_recall",
-    "dedup_recall_eval",
-    "refund_metrics_long",
-    "revenue_pivot_by_category",
-    "retention_triangle",
-    "revenue_mom_growth",
-    "flags_build",
-    "events_unified",
-    "flag_type_summary",
-    "cosine_topk",
-    "knn_label_vote",
-    "ivf_cell_search",
-    "proximity_connections",
-    "returning_after_break",
-    "memberships_build",
-    "active_memberships_on_date",
-    "daily_active_timeline",
-    "revenue_projection",
-    "revenue_actual_plus_projected",
-    "membership_conversion_asof",
-    "customers_build",
-    "doc_stats",
-    "token_frequencies",
-    "doc_fingerprints",
-    "exact_dedup",
-]
-
-# STAGED for round 14: any round-13 edit to a driver-green entry OUTSIDE
-# the round-13 window must append to _ROUND14_OWED in the same commit
-# (window-rotation discipline); new registry additions go to
-# _ROUND14_FRONT (capped at 20).
-_ROUND14_FRONT: list[str] = []
-_ROUND14_OWED: list[str] = [
-    # round-13 optimization rewrites outside the round-13 window
-    # (same-commit discipline; each bitwise-green vs the oracle at
-    # sf0.001/sf0.01 and driver-contract-driven in-session):
-    "table_diff_audit",  # single-exchange two-sided diff (was 2 windows + FO join)
-    "incremental_dedup",  # mixed-orientation slice of materialized minhash_lsh_pairs
-    "changeset_merge",  # one range exchange serves the merge window + final orderBy
-    "merged_transactions_window",  # same shared-range-exchange shape
-]
-if len(_ROUND14_FRONT) + len(_ROUND14_OWED) > _WINDOW_SLOTS:
-    raise ValueError(
-        "round-14 staging over budget: "
-        f"{len(_ROUND14_FRONT)} additions + {len(_ROUND14_OWED)} owed re-verifies "
-        f"> {_WINDOW_SLOTS} window slots — stop adding entries or queryize fewer"
-    )
-if len(_ROUND14_FRONT) > 20:
-    raise ValueError(
-        "round-14 additions capped at 20 (judge order, round-9 verdict #6: "
-        f"depth over breadth) — got {len(_ROUND14_FRONT)}"
-    )
-_r14_missing = [n for n in _ROUND14_FRONT + _ROUND14_OWED if n not in REGISTRY]
-if _r14_missing:
-    raise ValueError(f"round-14 staged names not in registry: {_r14_missing}")
-
-# ROUND-11 WINDOW (the 50 registry slots the driver verifies this round):
-#   * 3 front slots — the round-10 additions, the only entries never
-#     driver-checked; green here reaches 280/280 driver-verified-ever,
-#     the first round with ZERO never-verified entries.
-#   * 11 owed slots — the round-10 log-bucket-rank consolidation touches
-#     whose last driver-green row predates that rewrite.
-#   * 36 fill slots — the round-11 dec38 consolidation touches (above).
-_ROUND11_WINDOW = _ROUND11_FRONT + _ROUND11_OWED + _ROUND11_FILL
-if len(_ROUND11_WINDOW) != 50:
-    raise ValueError(
-        f"round-11 window must fill exactly 50 slots, got {len(_ROUND11_WINDOW)}"
-    )
-if len(set(_ROUND11_WINDOW)) != len(_ROUND11_WINDOW):
-    raise ValueError("round-11 window contains duplicate entries")
-_r11w_missing = [n for n in _ROUND11_WINDOW if n not in REGISTRY]
-if _r11w_missing:
-    raise ValueError(f"round-11 window names not in registry: {_r11w_missing}")
-if set(_ROUND12_OWED) & set(_ROUND11_WINDOW):
-    raise ValueError(
-        "round-12 owed re-verifies overlap the round-11 window — an entry "
-        "inside the current window is verified this round and owes nothing"
-    )
-
-# ROUND-12 WINDOW (the 50 registry slots the driver verifies this round):
-#   * 0 front slots — round 11 added no registry entries.
-#   * 3 owed slots — the round-11 guarded_long + nullif fixes' touched
-#     consumers outside the round-11 window.
-#   * 47 fill slots — the staleness rotation (oldest last-green first).
-_ROUND12_WINDOW = _ROUND12_FRONT + _ROUND12_OWED + _ROUND12_FILL
-if len(_ROUND12_WINDOW) != 50:
-    raise ValueError(
-        f"round-12 window must fill exactly 50 slots, got {len(_ROUND12_WINDOW)}"
-    )
-if len(set(_ROUND12_WINDOW)) != len(_ROUND12_WINDOW):
-    raise ValueError("round-12 window contains duplicate entries")
-_r12w_missing = [n for n in _ROUND12_WINDOW if n not in REGISTRY]
-if _r12w_missing:
-    raise ValueError(f"round-12 window names not in registry: {_r12w_missing}")
-if set(_ROUND13_OWED) & set(_ROUND12_WINDOW):
-    raise ValueError(
-        "round-13 owed re-verifies overlap the round-12 window — an entry "
-        "inside the round-12 window was verified that round and owes nothing"
-    )
-
-# ROUND-13 WINDOW (the 50 registry slots the driver verifies this round):
-#   * 1 front slot — streaming_sessions_flush, the round-12 build
-#     addition, the only never-driver-verified entry.
-#   * 23 owed slots — the round-12 optimization rewrites outside the
-#     round-12 window (r12 verdict order #1).
-#   * 26 fill slots — the staleness rotation (oldest last-green first).
-_ROUND13_WINDOW = _ROUND13_FRONT + _ROUND13_OWED + _ROUND13_FILL
-if len(_ROUND13_WINDOW) != 50:
-    raise ValueError(
-        f"round-13 window must fill exactly 50 slots, got {len(_ROUND13_WINDOW)}"
-    )
-if len(set(_ROUND13_WINDOW)) != len(_ROUND13_WINDOW):
-    raise ValueError("round-13 window contains duplicate entries")
-_r13w_missing = [n for n in _ROUND13_WINDOW if n not in REGISTRY]
-if _r13w_missing:
-    raise ValueError(f"round-13 window names not in registry: {_r13w_missing}")
-if set(_ROUND14_OWED) & set(_ROUND13_WINDOW):
-    raise ValueError(
-        "round-14 owed re-verifies overlap the round-13 window — an entry "
-        "inside the current window is verified this round and owes nothing"
-    )
-if len(_ROUND8_WINDOW) != 50:
-    raise ValueError(f"round-8 window must fill exactly 50 slots, got {len(_ROUND8_WINDOW)}")
-if len(set(_ROUND8_WINDOW)) != len(_ROUND8_WINDOW):
-    raise ValueError("round-8 window contains duplicate entries")
-_r8_missing = [n for n in _ROUND8_WINDOW if n not in REGISTRY]
-if _r8_missing:
-    raise ValueError(f"round-8 window names not in registry: {_r8_missing}")
-
-# hard failures, not asserts: a python -O run must not silently rotate the
-# driver's verification window onto the wrong entries.
-if len(_ROUND6_WINDOW) != 50:
-    raise ValueError(f"round-6 window must fill exactly 50 slots, got {len(_ROUND6_WINDOW)}")
-if len(set(_ROUND6_WINDOW)) != len(_ROUND6_WINDOW):
-    raise ValueError("round-6 window contains duplicate entries")
-_missing = [n for n in _ROUND6_WINDOW if n not in REGISTRY]
-if _missing:
-    raise ValueError(f"round-6 window names not in registry: {_missing}")
-if len(_ROUND7_WINDOW) != 50:
-    raise ValueError(f"round-7 window must fill exactly 50 slots, got {len(_ROUND7_WINDOW)}")
-if len(set(_ROUND7_WINDOW)) != len(_ROUND7_WINDOW):
-    raise ValueError("round-7 window contains duplicate entries")
-_r7_missing = [n for n in _ROUND7_WINDOW if n not in REGISTRY]
-if _r7_missing:
-    raise ValueError(f"round-7 window names not in registry: {_r7_missing}")
-_rest = [n for n in REGISTRY if n not in set(_ROUND13_WINDOW)]
-_reordered = {n: REGISTRY[n] for n in _ROUND13_WINDOW + _rest}
-REGISTRY.clear()
-REGISTRY.update(_reordered)
 
 
 def queries() -> dict[str, SparkQuery]:

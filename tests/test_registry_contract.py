@@ -1,11 +1,10 @@
 """Driver-contract regression guards on the registry itself.
 
-The driver verifies the FIRST 50 registry entries per round and
-canonicalizes results with pandas (sort columns by name, hash values) —
-two contracts that broke silently in the past: an import-order drift would
-scramble the verification window, and a complex-typed output column
-(``kmeans_refine``'s former ``array<bigint>`` centroids) crashes the
-canonicalizer's ``sort_values``.  These tests pin both.
+The registry runs in definition order with one entry per name, and the
+driver canonicalizes results with pandas (sort columns by name, hash
+values): a complex-typed output column (``kmeans_refine``'s former
+``array<bigint>`` centroids) crashes the canonicalizer's ``sort_values``.
+These tests pin both.
 """
 
 from __future__ import annotations
@@ -15,125 +14,27 @@ import pytest
 from basin_climbing_data_pipeline_spark import registry
 
 
-def test_window_order_is_the_declared_rotation():
-    """The first 50 entries must be exactly _ROUND13_WINDOW, in order —
-    the round's verification plan IS the registration order."""
-    names = list(registry.REGISTRY)
-    assert names[:50] == registry._ROUND13_WINDOW
-
-
-def test_rotation_arithmetic_cannot_compound_debt():
-    """Judge order (round-8 verdict #4): additions staged for the next
-    round plus owed re-verifies must fit the 50-slot window, and the
-    current window must cover every entry never driver-verified.  Round 12
-    opens with zero never-verified entries; the window is the 3 owed
-    re-verifies (guarded_long + nullif touched consumers) followed by the
-    47-slot staleness-rotation fill (oldest last driver-green row first).
-    Additions per round are further capped at 20 (round-9 verdict #6:
-    depth over breadth).  Round 13 opens with one never-verified entry
-    (streaming_sessions_flush, the front slot) and 23 owed re-verifies —
-    the round-12 optimization rewrites outside the round-12 window (r12
-    verdict order #1)."""
-    assert len(registry._ROUND13_WINDOW) == 50
-    assert (
-        len(registry._ROUND13_FRONT) + len(registry._ROUND13_OWED) <= registry._WINDOW_SLOTS
-    )
-    assert len(registry._ROUND13_FRONT) <= 20
-    # every staged round-13 name must exist and not already be in-window
-    for n in registry._ROUND13_FRONT + registry._ROUND13_OWED:
-        assert n in registry.REGISTRY
-    assert not set(registry._ROUND13_OWED) & set(registry._ROUND12_WINDOW)
-    # the staleness fill must never displace a front/owed slot
-    assert registry._ROUND13_WINDOW[
-        : len(registry._ROUND13_FRONT) + len(registry._ROUND13_OWED)
-    ] == (registry._ROUND13_FRONT + registry._ROUND13_OWED)
-    assert not set(registry._ROUND13_FILL) & set(
-        registry._ROUND13_FRONT + registry._ROUND13_OWED
-    )
-    # round-14 staging must stay inside next round's budget too
-    assert (
-        len(registry._ROUND14_FRONT) + len(registry._ROUND14_OWED) <= registry._WINDOW_SLOTS
-    )
-    assert not set(registry._ROUND14_OWED) & set(registry._ROUND13_WINDOW)
-
-
-def test_round12_fill_is_the_staleness_rotation():
-    """Judge order (round-11 verdict #1): the 47 fill slots must be the
-    oldest-last-driver-green entries, computed from CORRECTNESS_r01..r11
-    (ties broken by registry definition order).  Recomputes the selection
-    from the committed driver artifacts so a drifted fill list fails."""
-    import glob
-    import json
+def test_registry_is_in_definition_order_without_duplicates():
+    """REGISTRY iterates in the order of the ``register("...")`` calls in
+    registry.py, and every name is registered exactly once: a second
+    ``register`` of the same name would silently overwrite the first
+    entry while leaving the dict one entry short."""
     import os
     import re
 
-    root = os.path.join(os.path.dirname(__file__), "..")
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    rounds = [f for f in files if int(re.search(r"_r(\d+)", f).group(1)) <= 11]
-    if len(rounds) < 11:  # artifacts absent in a stripped checkout
-        pytest.skip("driver CORRECTNESS artifacts not present")
-    last_green: dict[str, int] = {}
-    for fn in rounds:
-        r = int(re.search(r"_r(\d+)", fn).group(1))
-        for name, row in json.load(open(fn)).items():
-            ok = (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") in (True, None)
-                and not row.get("err")
-            )
-            if ok:
-                last_green[name] = max(last_green.get(name, 0), r)
     src = open(
-        os.path.join(root, "basin_climbing_data_pipeline_spark", "registry.py")
+        os.path.join(
+            os.path.dirname(__file__),
+            "..",
+            "basin_climbing_data_pipeline_spark",
+            "registry.py",
+        )
     ).read()
-    reg_order = re.findall(r'register\(\s*["\']([a-z0-9_]+)["\']', src)
-    owed = set(registry._ROUND12_FRONT + registry._ROUND12_OWED)
-    # fill slots refresh DRIVER-GREEN entries; a never-verified entry is
-    # not a staleness candidate — it gets its first row via a front slot
-    # (round-12 additions sit in _ROUND13_FRONT for next round's window)
-    cand = [n for n in reg_order if n not in owed and n in last_green]
-    cand.sort(key=lambda n: (last_green[n], reg_order.index(n)))
-    assert registry._ROUND12_FILL == cand[: len(registry._ROUND12_FILL)]
-
-
-def test_round13_fill_is_the_staleness_rotation():
-    """Round-13 continuation of the same rotation: the 26 fill slots must
-    be the oldest-last-driver-green entries computed from
-    CORRECTNESS_r01..r12, excluding the front/owed slots (ties broken by
-    registry definition order)."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    rounds = [f for f in files if int(re.search(r"_r(\d+)", f).group(1)) <= 12]
-    if len(rounds) < 12:  # artifacts absent in a stripped checkout
-        pytest.skip("driver CORRECTNESS artifacts not present")
-    last_green: dict[str, int] = {}
-    for fn in rounds:
-        r = int(re.search(r"_r(\d+)", fn).group(1))
-        for name, row in json.load(open(fn)).items():
-            ok = (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") in (True, None)
-                and not row.get("err")
-            )
-            if ok:
-                last_green[name] = max(last_green.get(name, 0), r)
-    src = open(
-        os.path.join(root, "basin_climbing_data_pipeline_spark", "registry.py")
-    ).read()
-    reg_order = re.findall(r'register\(\s*["\']([a-z0-9_]+)["\']', src)
-    owed = set(registry._ROUND13_FRONT + registry._ROUND13_OWED)
-    cand = [n for n in reg_order if n not in owed and n in last_green]
-    cand.sort(key=lambda n: (last_green[n], reg_order.index(n)))
-    assert registry._ROUND13_FILL == cand[: len(registry._ROUND13_FILL)]
+    declared = re.findall(r'^register\(\s*["\']([a-z0-9_]+)["\']', src, re.M)
+    assert len(declared) == len(set(declared)), [
+        n for n in set(declared) if declared.count(n) > 1
+    ]
+    assert list(registry.REGISTRY) == declared
 
 
 def test_every_query_has_an_oracle_or_documented_rows_only():

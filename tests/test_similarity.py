@@ -416,7 +416,7 @@ def _left_fold_dot(a, b):
     return acc
 
 
-def test_top_component_degenerate_corpus_counts_zero(spark, tmp_path):
+def test_top_component_degenerate_corpus_counts_zero(spark, sf_dir, tmp_path):
     """Round-13 guard: n_vecs now rides the Gram collect (one bounded
     job) — on a corpus where every embedding is zero-norm the collect is
     empty and the count must still be exactly 0 with NULL stats, the
@@ -425,17 +425,15 @@ def test_top_component_degenerate_corpus_counts_zero(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    src = "/root/testdata/sf0.001"
     dst = str(tmp_path / "zero_corpus")
-    shutil.copytree(src, dst)
-    spark.read.parquet(f"{src}/embeddings.parquet").select(
+    shutil.copytree(sf_dir, dst)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb.select(
         "vec_id",
         F.transform("embedding", lambda _: F.lit(0.0).cast("float")).alias(
             "embedding"
         ),
-        *(
-            [c for c in ["label"] if c in spark.read.parquet(f"{src}/embeddings.parquet").columns]
-        ),
+        "label",
     ).write.mode("overwrite").parquet(f"{dst}/embeddings.parquet")
     from basin_climbing_data_pipeline_spark.operators.similarity import (
         embedding_top_component,
@@ -448,7 +446,7 @@ def test_top_component_degenerate_corpus_counts_zero(spark, tmp_path):
     assert r["top_eigen_share"] is None and r["residual"] is None
 
 
-def test_top_component_mixed_zero_norm_rows_survive(spark, tmp_path):
+def test_top_component_mixed_zero_norm_rows_survive(spark, sf_dir, tmp_path):
     """A corpus where SOME embeddings are zero-norm must not crash (the
     round-13 subexpression-elimination finding: the codegen'd filter
     evaluates the unit division on rows it is about to drop) and must
@@ -458,10 +456,9 @@ def test_top_component_mixed_zero_norm_rows_survive(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    src = "/root/testdata/sf0.001"
     dst = str(tmp_path / "mixed_corpus")
-    shutil.copytree(src, dst)
-    emb = spark.read.parquet(f"{src}/embeddings.parquet")
+    shutil.copytree(sf_dir, dst)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     zeroed = emb.select(
         "vec_id",
         F.when(

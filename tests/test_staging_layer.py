@@ -101,6 +101,20 @@ def test_rerun_is_idempotent(spark, sf_dir, tmp_path):
     assert n1 == n2, "re-run duplicated rows instead of overwriting"
 
 
+def test_snapshot_day_rerun_is_idempotent(spark, sf_dir, tmp_path):
+    root = str(tmp_path / "store")
+    one = {"expense_categories"}
+    t = next(t for t in st.STAGING_CATALOG if t.name in one)
+    assert t.snapshot, "the case needs a snapshot-marked table"
+    snap_path = os.path.join(root, t.family, "snapshots", t.name)
+    counts = []
+    for _ in range(2):
+        st.run_staging(spark, sf_dir, root, run_date="2024-03-01", only=one)
+        counts.append(spark.read.parquet(snap_path).count())
+    assert counts[0] > 0
+    assert counts[1] == counts[0], "snapshot-day re-run appended a second copy"
+
+
 def test_reconciliation_flags_a_missing_table(spark, sf_dir, tmp_path):
     root = str(tmp_path / "store")
     st.run_staging(spark, sf_dir, root, only=SLICE)

@@ -78,9 +78,7 @@ def value_hash(lines: list[str]) -> str:
 
 def main() -> int:
     # --json PATH: also write a machine-readable per-query record (status,
-    # rows, seconds, git head) — the repo commits this as CHECKLOCAL.json so
-    # each round leaves an auditable full-registry verification artifact
-    # even for entries outside the driver's 50-slot window.
+    # rows, seconds, git head) for the full-registry run.
     args = sys.argv[1:]
     global BITWISE
     if "--bitwise" in args:

@@ -1,4 +1,4 @@
-"""Generate QUERIES.md: one row per registered query — slot, name, oracle
+"""Generate QUERIES.md: one row per registered query — position, name, oracle
 status, and the first docstring line of its builder.  Run after editing the
 registry so the index stays current:
 
@@ -20,12 +20,10 @@ def main() -> None:
     print()
     print(
         "Auto-generated by `tools/gen_query_index.py` — one row per"
-        " registered query, in driver verification order (the driver"
-        " checks the first 50 per round; see registry.py for the rotation"
-        " rationale)."
+        " registered query, in the registry's definition order."
     )
     print()
-    print("| slot | query | oracle | summary |")
+    print("| # | query | oracle | summary |")
     print("|---|---|---|---|")
     for i, (name, (fn, sql)) in enumerate(REGISTRY.items(), start=1):
         inner = getattr(fn, "__wrapped__", fn)

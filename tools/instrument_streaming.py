@@ -2,7 +2,7 @@
 
 Question: does the round-8 `_await_finished` drain (awaitTermination with a
 timeout instead of an untimed wait) cost success-path wall time, or was the
-BENCH_r07→r08 move on streaming_sessions (2.0→3.2 s) and
+bench.py move on streaming_sessions (2.0→3.2 s) and
 streaming_windowed_counts (1.7→2.8 s) shared-JVM noise?
 
 Method: monkeypatch `_await_finished` to time the drain call itself and
