@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 TABLES = (
     "region",
@@ -93,33 +93,49 @@ def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None)
 
 
 # ---------------------------------------------------------------------------
-# two-tier warehouse: per-process builder materialization
+# one store: builder materialization
 # ---------------------------------------------------------------------------
 #
-# The reference persists every derived table to S3 and downstream jobs READ
-# the stored table instead of re-deriving it (data_pipeline/config.py:29-142
-# catalog; e.g. combined_transaction_data.csv is built once by
-# pipeline_handler.py:112-296 and consumed by ~10 later steps).  This engine
-# keeps the same two-tier design: hot builder outputs are written to a
-# per-process parquet warehouse on first use and every later consumer scans
-# the stored table — at 100 TB these would be persisted bronze/silver tables
-# with a real catalog; locally it's a temp dir cleaned at exit.
+# The reference persists every derived table to S3 once and downstream jobs
+# READ the stored table instead of re-deriving it (data_pipeline/config.py:
+# 29-142 catalog; e.g. combined_transaction_data.csv is built once by
+# pipeline_handler.py:112-296 and consumed by ~10 later steps).  Here the
+# staging store is that warehouse: while ``run_staging`` has a table bound
+# (``bound_store``), ``materialized`` writes it straight to its staged path,
+# once, and every consumer in the pass scans the staged files.  The row count
+# comes from the write's own metrics (``observe_rows``) and the scan is built
+# from the builder's schema, so neither costs a Spark job.  Builders called
+# outside a pass (registry queries, bench.py) write to a per-process temp
+# root cleaned at exit; a binding ends with its pass, so a later caller never
+# reads a store that may since have been moved or deleted.
 #
 # Correctness is unaffected (parquet round-trips every output type exactly);
 # set SPARK_GRAFT_NO_MATERIALIZE=1 to audit the raw builder plans
 # (tests/test_plans.py does).
 
 import atexit as _atexit
+import contextlib as _contextlib
 import functools as _functools
 import hashlib as _hashlib
 import shutil as _shutil
 import tempfile as _tempfile
 import threading as _threading
+from dataclasses import dataclass as _dataclass
+
+
+@_dataclass(frozen=True)
+class _Stored:
+    path: str
+    rows: int
+    scan: DataFrame
+
 
 _WAREHOUSE_ROOT: str | None = None
-_MATERIALIZED: dict[tuple[str, str], str] = {}
+_MATERIALIZED: dict[tuple[str, str], _Stored] = {}
 _MATERIALIZE_LOCKS: dict[tuple[str, str], _threading.Lock] = {}
 _REGISTRY_LOCK = _threading.Lock()
+# (abspath(sf_dir), table name) -> staged path, for the running pass only
+_BOUND: dict[tuple[str, str], str] = {}
 
 # The driver testdata ships each table as ONE parquet row group, so a source
 # scan is a single task no matter what maxPartitionBytes says.  Rewriting the
@@ -135,6 +151,49 @@ def _warehouse_root() -> str:
         _WAREHOUSE_ROOT = _tempfile.mkdtemp(prefix="basin_spark_wh_")
         _atexit.register(_shutil.rmtree, _WAREHOUSE_ROOT, ignore_errors=True)
     return _WAREHOUSE_ROOT
+
+
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row-count observation: after the action that runs it,
+    ``obs.get["rows"]`` holds the count, collected from the action's own
+    metrics instead of a second job."""
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+@_contextlib.contextmanager
+def bound_store(sf_dir: str, paths: dict[str, str]):
+    """Bind each named table to its staged path for the duration of one
+    pass: ``materialized`` builds a bound table into that path (once) instead
+    of the temp root.  A temp-root build made before the pass is set aside
+    and restored after it, and the pass's own builds are forgotten, so
+    nothing outside the pass reads the store."""
+    root = os.path.abspath(sf_dir)
+    keys = {(root, name): path for name, path in paths.items()}
+    with _REGISTRY_LOCK:
+        clash = sorted(k[1] for k in keys if k in _BOUND)
+        if clash:
+            raise RuntimeError(f"tables already bound to a running pass: {clash}")
+        _BOUND.update(keys)
+        set_aside = {k: _MATERIALIZED.pop(k) for k in keys if k in _MATERIALIZED}
+    try:
+        yield
+    finally:
+        with _REGISTRY_LOCK:
+            for k in keys:
+                _BOUND.pop(k, None)
+                _MATERIALIZED.pop(k, None)
+            _MATERIALIZED.update(set_aside)
+
+
+def bound_rows(sf_dir: str, name: str) -> int | None:
+    """Row count of ``name`` if ``materialized`` has written it to its bound
+    staged path in the running pass, else None."""
+    key = (os.path.abspath(sf_dir), name)
+    stored = _MATERIALIZED.get(key)
+    return stored.rows if stored is not None and key in _BOUND else None
 
 
 _TRACKED_CACHES: list[DataFrame] = []
@@ -175,7 +234,8 @@ def release_caches() -> None:
 
 def materialized(name: str):
     """Decorator for (spark, sf_dir) -> DataFrame builders: write the output
-    parquet once per (process, sf_dir) and serve every subsequent call as a
+    parquet once per (process, sf_dir), or once per pass to the table's
+    staged path while it is bound, and serve every subsequent call as a
     plain scan of the stored table."""
 
     def deco(fn):
@@ -184,31 +244,41 @@ def materialized(name: str):
             if os.environ.get("SPARK_GRAFT_NO_MATERIALIZE"):
                 return fn(spark, sf_dir)
             key = (os.path.abspath(sf_dir), name)
-            if key not in _MATERIALIZED:
+            stored = _MATERIALIZED.get(key)
+            if stored is None:
                 # per-key lock: independent builders materialize concurrently
                 # (bench loads them from threads), same-key callers build once
                 with _REGISTRY_LOCK:
                     lock = _MATERIALIZE_LOCKS.setdefault(key, _threading.Lock())
                 with lock:
-                    if key not in _MATERIALIZED:
-                        sfh = _hashlib.md5(key[0].encode()).hexdigest()[:8]
-                        path = os.path.join(_warehouse_root(), f"{sfh}_{name}")
-                        # coalesce, not repartition: the cap on output files
-                        # is a file-count bound, and paying a full extra
-                        # shuffle for it doubled the write cost of every
-                        # materialization (measured 4.6s -> 2.3s on the
-                        # transactions build at sf0.1).  When the final
-                        # stage has fewer partitions than the cap, coalesce
-                        # is a no-op and the natural layout is written;
-                        # parquet row-group splitting keeps downstream scan
-                        # parallelism regardless of file count.
-                        fn(spark, sf_dir).coalesce(
-                            _WAREHOUSE_WRITE_PARTITIONS
-                        ).write.mode("overwrite").parquet(path)
-                        _MATERIALIZED[key] = path
-            return spark.read.parquet(_MATERIALIZED[key])
+                    stored = _MATERIALIZED.get(key)
+                    if stored is None:
+                        stored = _MATERIALIZED[key] = _build(spark, fn(spark, sf_dir), key)
+            if stored.scan.sparkSession is not spark:
+                return spark.read.schema(stored.scan.schema).parquet(stored.path)
+            return stored.scan
 
         wrapper.__wrapped__ = fn
         return wrapper
 
     return deco
+
+
+def _build(spark: SparkSession, df: DataFrame, key: tuple[str, str]) -> _Stored:
+    path = _BOUND.get(key)
+    if path is None:
+        sfh = _hashlib.md5(key[0].encode()).hexdigest()[:8]
+        path = os.path.join(_warehouse_root(), f"{sfh}_{key[1]}")
+    # coalesce, not repartition: the cap on output files is a file-count
+    # bound, and paying a full extra shuffle for it doubled the write cost of
+    # every materialization (measured 4.6s -> 2.3s on the transactions build
+    # at sf0.1).  When the final stage has fewer partitions than the cap,
+    # coalesce is a no-op and the natural layout is written; parquet
+    # row-group splitting keeps downstream scan parallelism regardless of
+    # file count.
+    df, obs = observe_rows(df.coalesce(_WAREHOUSE_WRITE_PARTITIONS))
+    write_table(df, path)
+    # the builder's schema, not inference: a schema-less parquet read runs a
+    # one-task footer job
+    scan = spark.read.schema(df.schema).parquet(path)
+    return _Stored(path, obs.get["rows"], scan)

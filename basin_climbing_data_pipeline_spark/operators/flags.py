@@ -68,7 +68,7 @@ CATEGORY_EVENT_TYPE = {
 }
 
 
-@materialized("events_unified")
+@materialized("customer_events")
 def events_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The unified customer event log (reference build_events_table.py:27-128
     + customer_events_builder.py:641-664): checkins ∪ purchase events ∪
@@ -487,7 +487,7 @@ def _raw_flags(spark: SparkSession, sf_dir: str, as_of_date) -> DataFrame:
     return flags
 
 
-@materialized("flags")
+@materialized("customer_flags")
 def build_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full rule engine (reference customer_flags_engine.py:207-360):
 

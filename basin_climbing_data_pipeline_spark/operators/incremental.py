@@ -17,9 +17,10 @@ Engine equivalents, all pure DataFrame transforms:
   dynamic partition overwrite on a date-partitioned table (the 100 TB
   path; differential-tested against the relational merge).
 - :func:`append_if_absent` — ST4 via left-anti join.
-- :func:`write_snapshot` — date-partitioned snapshot write
-  (``partitionBy(snapshot_date)`` replaces the reference's date-suffixed
-  object keys).
+- :func:`write_snapshot` — date-partitioned snapshot as a file copy of
+  the landed table into its ``snapshot_date=<d>`` partition (the
+  partition directory replaces the reference's date-suffixed object
+  keys).
 
 At scale the merge writes only the affected date partitions
 (partition-overwrite), which these builders express by keying everything on
@@ -28,7 +29,7 @@ the date column.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
@@ -268,19 +269,33 @@ def append_if_absent(existing: DataFrame, incoming: DataFrame, id_col: str) -> D
     return existing.unionByName(new_rows)
 
 
-def snapshot_column(date_value: str) -> Column:
-    return F.lit(date_value).cast("date").alias("snapshot_date")
+def write_snapshot(table_dir: str, path: str, snapshot_date: str) -> None:
+    """Monthly immutable snapshot as a date partition: copy the files of the
+    landed table at ``table_dir`` into ``path/snapshot_date=<d>/``.  A
+    ``partitionBy("snapshot_date")`` table keeps the date in the directory
+    name, not in its files, so the copy IS that partition — no Spark job
+    rewrites the rows.
 
+    The copy goes through the Hadoop ``FileSystem`` API (any store Spark
+    writes to) into a ``_``-prefixed sibling, which readers skip, and then
+    replaces only its own date's partition: a re-run on the same date
+    converges while other dates' snapshots stay untouched."""
+    import datetime as dt
+    import uuid
 
-def write_snapshot(df: DataFrame, path: str, snapshot_date: str) -> None:
-    """Monthly immutable snapshot as a date partition.  Replaces only its
-    own ``snapshot_date`` partition, so a re-run on the same date converges
-    while other dates' snapshots stay untouched."""
-    df.withColumn("snapshot_date", snapshot_column(snapshot_date)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        "snapshot_date"
-    ).parquet(path)
+    day = dt.date.fromisoformat(snapshot_date).isoformat()
+    sc = SparkSession.active().sparkContext
+    jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()
+    Path = jvm.org.apache.hadoop.fs.Path
+    src, root = Path(table_dir), Path(path)
+    fs = root.getFileSystem(conf)
+    part = Path(root, f"snapshot_date={day}")
+    staged = Path(root, f"_snapshot_date={day}.{uuid.uuid4().hex}")
+    jvm.org.apache.hadoop.fs.FileUtil.copy(src.getFileSystem(conf), src, fs, staged, False, conf)
+    fs.delete(part, True)
+    if not fs.rename(staged, part):
+        fs.delete(staged, True)
+        raise OSError(f"snapshot rename {staged} -> {part} failed")
 
 
 # ---------------------------------------------------------------------------

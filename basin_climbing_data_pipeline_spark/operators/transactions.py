@@ -50,7 +50,7 @@ from ..io import load_table, materialized
 # ---------------------------------------------------------------------------
 
 
-@materialized("transactions")
+@materialized("combined_transaction_data")
 def build_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The combined transaction table (F1).  One row per line item; refunds
     (l_returnflag='R') carried as negative-amount rows exactly like the

@@ -23,12 +23,19 @@ Design, Spark-first:
 * **Control plane vs data plane.**  ``run_staging`` walks the catalog on
   the driver (the store index side, like boto3), while every build and
   write is a distributed Spark job.  Independent tables land concurrently
-  from one thread pool; Spark's scheduler interleaves their stages.
-* **Snapshots are the engine's snapshot sink** (S3,
+  from one thread pool; Spark's scheduler interleaves their stages, and
+  every job runs under the caller's job group.
+* **One store.**  Each table is written once, to its staged path.  The
+  pass binds its tables in ``io`` (``bound_store``), so a hot builder
+  wrapped by ``io.materialized`` writes its output straight to the store
+  and every other builder that reads it scans the staged files.  Nothing
+  is read back: row counts come from the write's own metrics.
+* **Snapshots are file copies** (S3,
   ``operators/incremental.py:write_snapshot``): immutable, date-stamped,
-  written only when the run date hits ``SNAPSHOT_DAY_OF_MONTH`` — the
+  taken only when the run date hits ``SNAPSHOT_DAY_OF_MONTH`` — the
   reference's monthly-snapshot contract, applied uniformly instead of 30
-  hand-written snapshot paths.
+  hand-written snapshot paths.  A snapshot partition holds the landed
+  files byte for byte, so it costs a copy, not a Spark job.
 * **Reconciliation closes the loop**: ``staging_reconciliation`` re-lists
   the store with the S7 catalog scan and checks every catalog entry landed
   non-empty — the audit the reference runs implicitly by crashing on a
@@ -49,10 +56,10 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..io import write_table
+from ..io import bound_rows, bound_store, observe_rows, write_table
 from ..operators.incremental import write_snapshot
 
 # first-of-month immutable snapshots (reference config.py:141)
@@ -139,6 +146,11 @@ def run_staging(
     as a DataFrame (table_name, family, n_rows, snapshotted) — the
     control-plane log the reference scatters across print statements.
 
+    Each table is written once: a ``materialized`` builder writes its own
+    staged path while the pass binds it, every other table is written here.
+    ``n_rows`` comes from the write's metrics, not a read-back, and a
+    snapshot copies the landed files into its date partition.
+
     Writes are idempotent (overwrite mode), so a re-run converges instead
     of duplicating — the property the reference gets from re-uploading
     whole CSVs."""
@@ -152,19 +164,25 @@ def run_staging(
     def land(t: StagingTable) -> tuple[str, str, int, bool]:
         df = t.builder(spark, sf_dir)
         path = staging_path(store_root, t)
-        write_table(df, path)
-        landed = spark.read.parquet(path)
+        n_rows = bound_rows(sf_dir, t.name)
+        if n_rows is None:
+            df, obs = observe_rows(df)
+            write_table(df, path)
+            n_rows = obs.get["rows"]
         took_snapshot = bool(snap_due and t.snapshot)
         if took_snapshot:
             write_snapshot(
-                landed,
+                path,
                 os.path.join(store_root, t.family, "snapshots", t.name),
                 run_date,
             )
-        return (t.name, t.family, landed.count(), took_snapshot)
+        return (t.name, t.family, n_rows, took_snapshot)
 
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        rows = list(pool.map(land, tables))
+    with bound_store(sf_dir, {t.name: staging_path(store_root, t) for t in tables}):
+        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+            # pool threads start with no Spark local properties; carry the
+            # caller's job group into each table's jobs
+            rows = list(pool.map(inheritable_thread_target(spark)(land), tables))
     return spark.createDataFrame(
         rows, "table_name string, family string, n_rows long, snapshotted boolean"
     ).orderBy("family", "table_name")

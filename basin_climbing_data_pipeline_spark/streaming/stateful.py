@@ -43,9 +43,18 @@ STATEFUL_STREAM_PARTITIONS_FLOOR = 8
 
 
 def _stateful_stream_partitions(spark: SparkSession) -> int:
-    env = os.environ.get("SPARK_GRAFT_STATEFUL_STREAM_PARTITIONS")
+    """Shuffle partitions for the stateful queries: the
+    ``SPARK_GRAFT_STATEFUL_STREAM_PARTITIONS`` override (an integer >= 1),
+    else cores/4 floored at ``STATEFUL_STREAM_PARTITIONS_FLOOR``.  The value
+    only applies to fresh checkpoints: a query resuming a checkpoint keeps
+    the partition count recorded there."""
+    var = "SPARK_GRAFT_STATEFUL_STREAM_PARTITIONS"
+    env = os.environ.get(var)
     if env:
-        return int(env)
+        n = int(env) if env.strip().isdigit() else 0
+        if n < 1:
+            raise ValueError(f"{var} must be an integer >= 1, got {env!r}")
+        return n
     return max(
         STATEFUL_STREAM_PARTITIONS_FLOOR,
         spark.sparkContext.defaultParallelism // 4,

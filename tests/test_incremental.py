@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
@@ -115,8 +116,11 @@ def test_snapshot_partitioned_write(spark, tmp_path):
     d = dt.date
     df = _df(spark, [("a", d(2024, 1, 1), 1)])
     path = str(tmp_path / "snaps")
-    inc.write_snapshot(df, path, "2024-01-01")
-    inc.write_snapshot(df.withColumn("v", F.lit(2)), path, "2024-02-01")
+    landed = {}
+    for day, frame in (("2024-01-01", df), ("2024-02-01", df.withColumn("v", F.lit(2)))):
+        landed[day] = str(tmp_path / f"table_{day}")
+        frame.write.parquet(landed[day])
+        inc.write_snapshot(landed[day], path, day)
     back = spark.read.parquet(path)
     assert back.count() == 2
     assert {str(r["snapshot_date"]) for r in back.collect()} == {
@@ -126,6 +130,14 @@ def test_snapshot_partitioned_write(spark, tmp_path):
     # partition pruning reads one snapshot
     one = back.filter(F.col("snapshot_date") == "2024-02-01")
     assert one.count() == 1 and one.collect()[0]["v"] == 2
+    # a snapshot partition is the landed table's files, byte for byte
+    for day, table_dir in landed.items():
+        part = os.path.join(path, f"snapshot_date={day}")
+        names = sorted(f for f in os.listdir(table_dir) if f.endswith(".parquet"))
+        assert names and names == sorted(f for f in os.listdir(part) if f.endswith(".parquet"))
+        for f in names:
+            with open(os.path.join(table_dir, f), "rb") as a, open(os.path.join(part, f), "rb") as b:
+                assert a.read() == b.read()
 
 
 def test_bounded_merge_window_permutations_property(spark):

@@ -128,3 +128,49 @@ def test_reconciliation_flags_a_missing_table(spark, sf_dir, tmp_path):
     assert all(
         audit[n] == "OK" for n in SLICE - {"checkins"}
     ), "unrelated tables must stay OK"
+
+
+def test_staging_jobs_run_in_the_callers_job_group(spark, sf_dir, tmp_path):
+    """Every Spark job of a pass belongs to the caller's job group, so a
+    per-operation attribution of task time sees the pass, not ungrouped
+    pool-thread jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("staging-test", "staging pass")
+    try:
+        st.run_staging(spark, sf_dir, str(tmp_path / "store"), only={"customers"})
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert tracker.getJobIdsForGroup("staging-test"), "the pass ran no grouped job"
+
+
+def test_materialized_table_is_written_once_to_the_store(spark, sf_dir, tmp_path, monkeypatch):
+    """A hot builder's table lands once, at its staged path: nothing of it
+    goes to the per-process temp root, and the manifest's row count (from
+    the write's metrics) matches the stored table."""
+    from basin_climbing_data_pipeline_spark import io
+
+    wh = tmp_path / "wh"
+    wh.mkdir()
+    monkeypatch.setattr(io, "_WAREHOUSE_ROOT", str(wh))
+    monkeypatch.setattr(io, "_MATERIALIZED", {})
+    root = str(tmp_path / "store")
+    manifest = st.run_staging(spark, sf_dir, root, only={"customers"}).collect()
+    assert not list(wh.glob("*_customers")), "customers was also written to the temp root"
+    t = next(t for t in st.STAGING_CATALOG if t.name == "customers")
+    assert manifest[0]["n_rows"] == spark.read.parquet(st.staging_path(root, t)).count()
+
+
+def test_store_binding_ends_with_the_pass(spark, sf_dir, tmp_path):
+    """After a pass, a materialized builder no longer reads the store: the
+    store may be moved or deleted and the builder still serves its rows."""
+    from basin_climbing_data_pipeline_spark.operators.events import build_checkins
+
+    root = str(tmp_path / "store")
+    st.run_staging(spark, sf_dir, root, only={"checkins"})
+    shutil.rmtree(root)
+    got = {tuple(r) for r in build_checkins(spark, sf_dir).collect()}
+    assert got == {tuple(r) for r in build_checkins.__wrapped__(spark, sf_dir).collect()}

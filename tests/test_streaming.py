@@ -370,6 +370,22 @@ def test_await_finished_passes_through_on_drain():
     st._await_finished(FakeQuery(), timeout=1)
 
 
+def test_stateful_stream_partitions_env_is_validated(spark, monkeypatch):
+    """The partition override is an integer >= 1; anything else fails with
+    an error naming the variable, not a bare int() ValueError."""
+    import pytest
+
+    from basin_climbing_data_pipeline_spark.streaming.stateful import _stateful_stream_partitions
+
+    var = "SPARK_GRAFT_STATEFUL_STREAM_PARTITIONS"
+    monkeypatch.setenv(var, "12")
+    assert _stateful_stream_partitions(spark) == 12
+    for bad in ("eight", "0", "-3", "2.5"):
+        monkeypatch.setenv(var, bad)
+        with pytest.raises(ValueError, match=var):
+            _stateful_stream_partitions(spark)
+
+
 def test_streaming_value_drift_psi_matches_batch(spark, sf_dir):
     """Differential: the watermarked streaming histogram feeds the same
     PSI post-process as the batch scan, so over a static prefix the two

@@ -41,6 +41,16 @@ def test_check_canonicalizer_handles_all_driver_types():
     assert cols == ["a", "b"]           # sorted by name
     assert lines == ["1|2", "3|4"]      # values follow the column order
 
+
+def test_driver_sim_aligns_rows_by_column_name():
+    from tools.driver_sim import aligned_rows
+
+    # same data, columns in a different SELECT order and case
+    spark_side = aligned_rows(["b", "A"], [(2, 1), (4, 3)])
+    oracle_side = aligned_rows(["a", "B"], [(3, 4), (1, 2)])
+    assert spark_side == oracle_side == [("1", "2"), ("3", "4")]
+
+
 def test_query_index_generator_runs():
     out = subprocess.run(
         [sys.executable, "tools/gen_query_index.py"],

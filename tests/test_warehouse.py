@@ -1,7 +1,8 @@
-"""Two-tier warehouse materialization: the per-process parquet warehouse
-(io.materialized) must be value-identical to the raw builder output — the
-same guarantee the reference relies on when downstream jobs read
-S3-materialized tables instead of re-deriving them."""
+"""Builder materialization: a table stored by io.materialized (here in the
+per-process temp root, outside any staging pass) must be value-identical
+to the raw builder output — the same guarantee the reference relies on
+when downstream jobs read S3-materialized tables instead of re-deriving
+them."""
 
 from __future__ import annotations
 

@@ -44,6 +44,14 @@ def canon(v):
     return str(v)
 
 
+def aligned_rows(columns: list[str], rows) -> list[tuple]:
+    """Canonical rows with each row's values in sorted lower-case column-name
+    order, so two engines that return the same columns in a different
+    SELECT order compare equal; sorted for an order-insensitive compare."""
+    order = sorted(range(len(columns)), key=lambda i: columns[i].lower())
+    return sorted(tuple(canon(r[i]) for i in order) for r in rows)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:]
@@ -76,13 +84,12 @@ def main() -> int:
     for name in names:
         fn = qs[name]
         sdf = fn(spark, sf_dir)
-        s_rows = sorted(
-            tuple(canon(v) for v in r) for r in sdf.collect()
-        )
+        s_rows = aligned_rows(sdf.columns, sdf.collect())
         cur = con.execute(sqls[name])
-        o_rows = sorted(tuple(canon(v) for v in r) for r in cur.fetchall())
+        o_names = [d[0] for d in cur.description]
+        o_rows = aligned_rows(o_names, cur.fetchall())
         s_cols = sorted(c.lower() for c in sdf.columns)
-        o_cols = sorted(d[0].lower() for d in cur.description)
+        o_cols = sorted(c.lower() for c in o_names)
         ok = s_rows == o_rows and s_cols == o_cols
         print(f"{'PASS' if ok else 'FAIL'} {name}: spark={len(s_rows)} oracle={len(o_rows)}")
         if not ok:
