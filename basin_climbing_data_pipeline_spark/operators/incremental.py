@@ -7,24 +7,21 @@ fresh rows, dedup by id keep-first — pipeline_handler.py:429-479), keeps
 monthly immutable snapshots (pipeline_handler.py:343-354), and skips rows
 that already exist on append (ST4, experiment_tracking.py:86-94).
 
-Engine equivalents, all pure DataFrame transforms:
+Engine equivalents:
 
-- :func:`replace_window_merge` — the ST1 splice with an explicit
-  deterministic keep-first ordering (SURVEY.md §4.3).  Driver-checked via
-  :func:`merged_transactions_window` (stale stored table + re-fetched
-  window over the transactions build, DuckDB oracle).
-- :func:`overwrite_window_partitions` — the same splice as O(window)
-  dynamic partition overwrite on a date-partitioned table (the 100 TB
-  path; differential-tested against the relational merge).
+- :func:`replace_bounded_window_merge` — the ST1 splice over a
+  ``[start, end]`` window with an explicit deterministic keep-first
+  ordering (SURVEY.md §4.3); the one window merge, used by the cron-batch
+  splice (an open-ended window) and by the streaming sink.
+  Driver-checked via :func:`merged_transactions_window` (stale stored
+  table + re-fetched window over the transactions build, DuckDB oracle).
+- :func:`apply_changeset` — tombstone-aware MERGE over the same
+  keep-first step.
 - :func:`append_if_absent` — ST4 via left-anti join.
 - :func:`write_snapshot` — date-partitioned snapshot as a file copy of
   the landed table into its ``snapshot_date=<d>`` partition (the
   partition directory replaces the reference's date-suffixed object
   keys).
-
-At scale the merge writes only the affected date partitions
-(partition-overwrite), which these builders express by keying everything on
-the date column.
 """
 
 from __future__ import annotations
@@ -34,42 +31,32 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 
-def replace_window_merge(
-    existing: DataFrame,
-    fresh: DataFrame,
-    date_col: str,
-    window_start,
+def _keep_first(
+    unioned: DataFrame,
     id_col: str,
+    flag_col: str,
     order_cols: list[str],
-    range_partition: bool = False,
+    range_partition: bool,
 ) -> DataFrame:
-    """Keep existing rows with date < window_start, union the fresh window,
-    dedup by id keeping the first row under an explicit ordering (fresh rows
-    win ties by sorting on is_fresh desc first).
+    """Keep one row per id: flagged rows (``flag_col`` = 1) first, then
+    ``order_cols``.  Drops the rank column; the caller drops ``flag_col``.
 
     ``range_partition=True`` (guide §2.4 — share the exchange): callers
-    that globally ORDER the merge output by ``id_col`` afterwards can
+    that globally ORDER the output by ``id_col`` afterwards can
     range-partition the union ONCE here; RangePartitioning(id) satisfies
     both the window's clustered-distribution requirement and the final
     sort's ordered-distribution requirement, so the downstream orderBy
     adds no second exchange.  Values are identical either way — only the
     physical partitioning changes."""
-    kept = existing.filter(F.col(date_col) < F.lit(window_start)).withColumn(
-        "_is_fresh", F.lit(0)
-    )
-    incoming = fresh.filter(F.col(date_col) >= F.lit(window_start)).withColumn(
-        "_is_fresh", F.lit(1)
-    )
-    unioned = kept.unionByName(incoming)
     if range_partition:
         unioned = unioned.repartitionByRange(F.col(id_col).asc())
     w = Window.partitionBy(id_col).orderBy(
-        F.desc("_is_fresh"), *[F.col(c) for c in order_cols]
+        F.desc(flag_col), *[F.col(c) for c in order_cols]
     )
     return (
         unioned.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn", "_is_fresh")
+        .drop("_rn")
     )
 
 
@@ -81,57 +68,37 @@ def replace_bounded_window_merge(
     window_end,
     id_col: str,
     order_cols: list[str],
-    version_col: str | None = None,
+    range_partition: bool = False,
 ) -> DataFrame:
-    """Order-insensitive variant of :func:`replace_window_merge` for streamed
-    re-fetch windows that may arrive in ANY order (Spark's file source gives
-    no ordering guarantee): keep existing rows strictly OUTSIDE
-    ``[window_start, window_end]`` — on *both* sides, so a window processed
-    before a later one never deletes that later window's rows — splice the
-    fresh rows inside the window, dedup by id with fresh-wins.
+    """The ST1 splice: keep existing rows strictly OUTSIDE
+    ``[window_start, window_end]``, splice in the fresh rows inside it, and
+    dedup by id keeping the first row under an explicit ordering (fresh
+    rows win by sorting on freshness first, then ``order_cols``).
 
-    Order-insensitivity contract (default, ``version_col=None``): *row
-    retention* (which ids survive) is independent of window arrival order,
-    but *values* follow last-processed-wins — if two windows both carry a
-    row for the same id with DIFFERENT column values, the later-processed
-    window's row is kept even if it was fetched earlier.  This matches the
-    reference's source semantics (a re-fetch returns the provider's current
-    state for the row, so overlapping windows carry identical rows for
-    unchanged ids).
+    Keeping stored rows on *both* sides of the window makes the merge
+    order-insensitive for streamed re-fetch windows that arrive in ANY
+    order (Spark's file source gives no ordering guarantee): a window
+    processed before a later one never deletes that later window's rows.
+    *Row retention* (which ids survive) is independent of arrival order;
+    *values* follow last-processed-wins, which matches the reference's
+    source semantics (a re-fetch returns the provider's current state, so
+    overlapping windows carry identical rows for unchanged ids).  A stored
+    row whose id the window carries loses to the fresh row wherever its
+    date lies, so a row that moves a day keeps one copy.
 
-    ``version_col`` mode, for sources that CAN serve stale overlapping
-    rows: pass the name of a fetch-timestamp/version column and the merge
-    becomes an upsert-by-newest-version (the Delta ``MERGE``-style
-    semantics): stored rows inside the window stay in the candidate set and
-    the dedup orders by ``version_col`` DESCENDING ahead of freshness, so
-    the newest *fetch* wins no matter which window is processed last.  The
-    trade-off is deliberate and documented: upsert mode cannot observe
-    upstream deletes (a row absent from a newer re-fetch survives via its
-    stored older-version copy) — delete detection requires the default
-    replace semantics.
-
-    ``replace_window_merge`` (one-sided) remains correct for the cron-batch
-    path where windows are refetched in ascending order and the newest window
-    is authoritative for everything after its start."""
-    outside = (F.col(date_col) < F.lit(window_start)) | (
-        F.col(date_col) > F.lit(window_end)
-    )
+    The cron-batch splice, where the newest window is authoritative for
+    everything after its start, is the same call with
+    ``window_end="9999-12-31"`` (Spark's largest DATE): no row lies past
+    it.  For ``range_partition`` see :func:`_keep_first`."""
     kept = existing.filter(
-        outside if version_col is None else F.lit(True)
+        (F.col(date_col) < F.lit(window_start)) | (F.col(date_col) > F.lit(window_end))
     ).withColumn("_is_fresh", F.lit(0))
     incoming = fresh.filter(
         (F.col(date_col) >= F.lit(window_start)) & (F.col(date_col) <= F.lit(window_end))
     ).withColumn("_is_fresh", F.lit(1))
-    unioned = kept.unionByName(incoming)
-    version_first = [F.desc(version_col)] if version_col is not None else []
-    w = Window.partitionBy(id_col).orderBy(
-        *version_first, F.desc("_is_fresh"), *[F.col(c) for c in order_cols]
-    )
-    return (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_is_fresh")
-    )
+    return _keep_first(
+        kept.unionByName(incoming), id_col, "_is_fresh", order_cols, range_partition
+    ).drop("_is_fresh")
 
 
 # ---------------------------------------------------------------------------
@@ -175,11 +142,12 @@ def merged_transactions_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh = txn.filter(
         F.col("txn_date") >= F.lit(MERGE_WINDOW_START).cast("date")
     ).withColumn("row_version", F.lit(2))
-    merged = replace_window_merge(
+    merged = replace_bounded_window_merge(
         stored,
         fresh,
         "txn_date",
         MERGE_WINDOW_START,
+        "9999-12-31",  # one-sided: the window runs to the end of time
         "transaction_id",
         _MERGE_ORDER_COLS,
         range_partition=True,  # the orderBy below reuses the one exchange
@@ -215,52 +183,6 @@ SELECT transaction_id, txn_date, revenue_category, total_amount, row_version
 FROM ranked WHERE rn = 1
 ORDER BY transaction_id
 """
-
-
-def overwrite_window_partitions(
-    spark: SparkSession,
-    table_dir: str,
-    fresh: DataFrame,
-    date_col: str,
-    window_start,
-    window_end,
-    id_col: str,
-    order_cols: list[str],
-) -> DataFrame:
-    """ST1 at scale: dynamic partition overwrite instead of table rewrite.
-
-    The reference rewrites the WHOLE stored CSV per merge
-    (pipeline_handler.py:446-479); the batch builders here express the same
-    splice relationally (:func:`replace_window_merge`).  On a partitioned
-    table neither is necessary: dedup the re-fetched window, then let
-    ``partitionOverwriteMode=dynamic`` replace exactly the date partitions
-    the window carries — stored rows outside the window are never read,
-    shuffled, or rewritten, so merge cost is O(window), not O(table).
-
-    Semantic note vs :func:`replace_bounded_window_merge`: a date INSIDE
-    the window with no re-fetched rows keeps its stored partition here
-    (dynamic overwrite only replaces partitions present in the write); the
-    relational merge deletes it.  Re-fetches return every date they cover,
-    so the two agree on real feeds — differential-tested in
-    tests/test_incremental.py.
-
-    Returns a scan of the updated table."""
-    w = Window.partitionBy(id_col).orderBy(*[F.col(c) for c in order_cols])
-    deduped = (
-        fresh.filter(
-            (F.col(date_col) >= F.lit(window_start))
-            & (F.col(date_col) <= F.lit(window_end))
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    # per-write option, not the session conf: concurrent writers share the
-    # session, and a static-mode overwrite would drop every other partition
-    deduped.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(date_col).parquet(table_dir)
-    return spark.read.parquet(table_dir)
 
 
 def append_if_absent(existing: DataFrame, incoming: DataFrame, id_col: str) -> DataFrame:
@@ -321,23 +243,13 @@ def apply_changeset(
     tagged 1) → per-id window ordered (change-first, then ``order_cols``)
     → keep the winning row → drop rows whose winner is a tombstone.  The
     delete branch costs nothing extra — a tombstone simply wins its id's
-    window and is filtered.  At scale this keys on the id like any MERGE;
-    with a date-partitioned table you'd restrict ``existing`` to the
-    changeset's partition range first (overwrite_window_partitions)."""
+    window and is filtered.  At scale this keys on the id like any MERGE."""
     ex = existing.withColumn(op_col, F.lit("upsert")).withColumn("_is_change", F.lit(0))
     ch = changes.withColumn("_is_change", F.lit(1))
-    unioned = ex.unionByName(ch)
-    if range_partition:
-        # see replace_window_merge: one range exchange serves both the
-        # per-id window and a caller's global orderBy(id_col)
-        unioned = unioned.repartitionByRange(F.col(id_col).asc())
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc("_is_change"), *[F.col(c) for c in order_cols]
-    )
     return (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col(op_col) != "delete"))
-        .drop("_rn", "_is_change", op_col)
+        _keep_first(ex.unionByName(ch), id_col, "_is_change", order_cols, range_partition)
+        .filter(F.col(op_col) != "delete")
+        .drop("_is_change", op_col)
     )
 
 

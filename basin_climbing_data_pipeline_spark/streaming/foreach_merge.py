@@ -9,11 +9,12 @@ batch's own ``[min_date, max_date]`` span — on both sides, so an
 earlier-window batch processed after a later-window one never deletes the
 later window's rows — splices the fresh rows in, and dedups by id (fresh
 wins).  Overlapping windows replayed across batches therefore never
-duplicate and never drop.  The merged table is written to a new version
-directory per batch and the latest version is the table (the
-write-new-then-swap discipline; at scale this is Delta MERGE or dynamic
-partition overwrite — same plan shape, transactional commit instead of a
-version pointer).
+duplicate and never drop.  Batch ``k`` writes the merged table to its own
+version directory ``target_dir/v<k>`` and the newest version on disk is
+the table (the write-new-then-swap discipline).  A batch reads the newest
+version below its own id, so a restarted stream resumes from what the
+last run stored, and a batch re-run after a crash between its write and
+its checkpoint commit never reads the directory it overwrites.
 
 Differential contract (tests/test_foreachbatch_merge.py): streaming the
 events table as overlapping window files through this sink equals the batch
@@ -23,6 +24,7 @@ dedup of the same data, regardless of file arrival order.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +32,8 @@ from pyspark.sql import functions as F
 from ..io import normalize_event_ts
 from ..operators.incremental import replace_bounded_window_merge
 from .events_stream import _await_finished, _stream_partitions
+
+_VERSION_DIR = re.compile(r"v(\d+)")
 
 
 def merge_stream(
@@ -72,13 +76,8 @@ def merge_stream(
         "event_type",
         "value",
     )
-    versions: list[str] = []
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not versions:
-            existing = spark.createDataFrame([], batch_df.schema)
-        else:
-            existing = spark.read.parquet(versions[-1])
         # one scalar pair per micro-batch on the driver — foreachBatch runs
         # driver-side by contract; at scale this comes from file metadata
         bounds = batch_df.agg(
@@ -86,6 +85,11 @@ def merge_stream(
         ).collect()[0]
         if bounds["lo"] is None:  # empty batch
             return
+        prev = _newest_version(target_dir, below=batch_id)
+        if prev is None:
+            existing = spark.createDataFrame([], batch_df.schema)
+        else:
+            existing = spark.read.parquet(prev)
         merged = replace_bounded_window_merge(
             existing,
             batch_df,
@@ -95,9 +99,7 @@ def merge_stream(
             "event_id",
             ["ts_us", "event_id"],
         )
-        out = os.path.join(target_dir, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        versions.append(out)
+        merged.write.mode("overwrite").parquet(os.path.join(target_dir, f"v{batch_id}"))
 
     with _stream_partitions(spark):
         q = (
@@ -108,126 +110,18 @@ def merge_stream(
             .start()
         )
         _await_finished(q)
-    if not versions:
+    newest = _newest_version(target_dir)
+    if newest is None:
         return spark.createDataFrame([], stream.schema)
-    return spark.read.parquet(versions[-1])
+    return spark.read.parquet(newest)
 
 
-# ---------------------------------------------------------------------------
-# ACID-table variant: the same window-splice as ONE Delta MERGE per batch
-# ---------------------------------------------------------------------------
-#
-# Design note (round-5 review item): the versioned-parquet sink above is the
-# TEST PROFILE of this operator — write-new-then-swap gives the same
-# reader-visible atomicity on a filesystem without any table-format
-# dependency, which is what this container can execute.  At 100 TB the same
-# micro-batch body is a single transactional statement against a
-# Delta/Iceberg table:
-#
-#   MERGE INTO target t USING batch b ON t.event_id = b.event_id
-#     WHEN MATCHED              THEN UPDATE SET *        -- fresh wins by id
-#     WHEN NOT MATCHED          THEN INSERT *            -- splice window in
-#     WHEN NOT MATCHED BY SOURCE
-#          AND t.event_date BETWEEN lo AND hi
-#                               THEN DELETE              -- drop stale window
-#
-# — the three clauses are exactly replace_bounded_window_merge's kept /
-# fresh-wins / outside-both-sides semantics, with the version pointer
-# replaced by the table format's commit protocol (and file-level skipping,
-# compaction, and concurrent-writer resolution for free).  merge_stream and
-# merge_stream_delta share the stream setup and bounds logic so the two
-# profiles cannot drift structurally; the differential test
-# (tests/test_foreachbatch_merge.py::test_delta_profile_matches_parquet)
-# runs whenever delta-spark is importable and skips otherwise.
-
-
-def _dedup_batch(batch_df: DataFrame, id_col: str, order_cols: list[str]) -> DataFrame:
-    """Keep-first-by-order within a micro-batch, the same discipline the
-    parquet profile's dedup window applies — Delta MERGE requires the
-    source to be unique per key."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy(*[F.col(c) for c in order_cols])
-    return (
-        batch_df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def merge_stream_delta(
-    spark: SparkSession, source_dir: str, target_path: str, sink_name: str
-) -> DataFrame:
-    """``merge_stream`` against a Delta table: one ACID ``MERGE`` per
-    micro-batch instead of a versioned-parquet swap.  Requires
-    ``delta-spark`` AND a session built with the Delta SQL extension
-    (``spark.sql.extensions`` / catalog — session-construction settings
-    that cannot be retrofitted); raises ``NotImplementedError`` with the
-    fallback's name when the dependency is absent."""
-    try:
-        from delta.tables import DeltaTable
-    except ImportError as e:  # pragma: no cover - exercised only sans delta
-        raise NotImplementedError(
-            "delta-spark is not installed; use merge_stream (the "
-            "versioned-parquet profile) — identical merge semantics"
-        ) from e
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    has_files = os.path.isdir(source_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(source_dir)
-    )
-    if has_files:
-        schema = spark.read.parquet(source_dir).schema
-    else:
-        from .events_stream import EVENTS_NANOS_SCHEMA
-
-        schema = EVENTS_NANOS_SCHEMA
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    stream = normalize_event_ts(raw).select(
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.to_date("ts").alias("event_date"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bounds = batch_df.agg(
-            F.min("event_date").alias("lo"), F.max("event_date").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is None:  # empty batch
-            return
-        fresh = _dedup_batch(batch_df, "event_id", ["ts_us", "event_id"])
-        if not DeltaTable.isDeltaTable(spark, target_path):
-            fresh.write.format("delta").mode("overwrite").save(target_path)
-            return
-        lo, hi = bounds["lo"].isoformat(), bounds["hi"].isoformat()
-        (
-            DeltaTable.forPath(spark, target_path)
-            .alias("t")
-            .merge(fresh.alias("b"), "t.event_id = b.event_id")
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .whenNotMatchedBySourceDelete(
-                f"t.event_date >= DATE'{lo}' AND t.event_date <= DATE'{hi}'"
-            )
-            .execute()
-        )
-
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(target_path, "_chk"))
-            .queryName(sink_name)
-            .start()
-        )
-        _await_finished(q)
-    if not DeltaTable.isDeltaTable(spark, target_path):
-        return spark.createDataFrame([], stream.schema)
-    return spark.read.format("delta").load(target_path)
+def _newest_version(target_dir: str, below: float = float("inf")) -> str | None:
+    """Path of the ``v<k>`` version directory under ``target_dir`` with the
+    largest batch id ``k < below``, or None.  Ids compare as integers: as
+    text, ``v10`` sorts before ``v9``."""
+    if not os.path.isdir(target_dir):
+        return None
+    ids = [int(m[1]) for m in map(_VERSION_DIR.fullmatch, os.listdir(target_dir)) if m]
+    ids = [k for k in ids if k < below]
+    return os.path.join(target_dir, f"v{max(ids)}") if ids else None

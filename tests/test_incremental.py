@@ -12,15 +12,15 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "id string, d date, v int")
 
 
-def test_replace_window_merge(spark):
+def test_one_sided_window_merge(spark):
     d = dt.date
     existing = _df(
         spark,
         [("a", d(2024, 1, 1), 1), ("b", d(2024, 1, 5), 2), ("c", d(2024, 1, 9), 3)],
     )
     fresh = _df(spark, [("b", d(2024, 1, 5), 20), ("d", d(2024, 1, 8), 4)])
-    out = inc.replace_window_merge(
-        existing, fresh, "d", d(2024, 1, 5), "id", ["d", "v"]
+    out = inc.replace_bounded_window_merge(
+        existing, fresh, "d", d(2024, 1, 5), "9999-12-31", "id", ["d", "v"]
     )
     got = {(r["id"], r["v"]) for r in out.collect()}
     # a kept (before window); b replaced by fresh; c dropped (in window, not
@@ -28,13 +28,15 @@ def test_replace_window_merge(spark):
     assert got == {("a", 1), ("b", 20), ("d", 4)}
 
 
-def test_replace_window_merge_dedup_deterministic(spark):
+def test_one_sided_window_merge_dedup_deterministic(spark):
     d = dt.date
     existing = _df(spark, [("x", d(2024, 1, 1), 5)])
     fresh = _df(
         spark, [("x", d(2024, 1, 6), 7), ("x", d(2024, 1, 6), 6)]
     )  # duplicate id in fresh window
-    out = inc.replace_window_merge(existing, fresh, "d", d(2024, 1, 6), "id", ["d", "v"])
+    out = inc.replace_bounded_window_merge(
+        existing, fresh, "d", d(2024, 1, 6), "9999-12-31", "id", ["d", "v"]
+    )
     rows = out.collect()
     assert len(rows) == 1 and rows[0]["v"] == 6  # lowest v wins by order_cols
 
@@ -65,42 +67,27 @@ def test_bounded_merge_order_insensitive(spark):
     assert {i for i, _ in got_rev} == {"a", "b", "c"}
 
 
-def test_bounded_merge_version_col_makes_values_order_insensitive(spark):
-    """``version_col`` mode — the escape hatch for sources that can serve
-    STALE overlapping rows: with a fetch-timestamp column named, the merge
-    becomes upsert-by-newest-version and the newest fetch's VALUE wins
-    regardless of which window is processed last (the default contract is
-    last-processed-wins)."""
+def test_bounded_merge_moved_id_keeps_one_row(spark):
+    """A revised row whose date moves keeps exactly one row for its id, and
+    the fresh row wins: m moves across the window start (its stored twin
+    lies outside the window, so only the id dedup can drop it), n moves
+    within the window."""
     d = dt.date
-
-    def fdf(rows):
-        return spark.createDataFrame(rows, "id string, d date, v int, fetch_ts int")
-
-    # both windows cover b on the same date but carry different values;
-    # w_new was fetched later (fetch_ts 2) than w_old (fetch_ts 1)
-    w_old = fdf([("b", d(2024, 1, 5), 2, 1)])
-    w_new = fdf([("b", d(2024, 1, 5), 20, 2)])
-
-    def apply(existing, fresh):
-        return inc.replace_bounded_window_merge(
-            existing, fresh, "d", d(2024, 1, 5), d(2024, 1, 5), "id",
-            ["d", "v"], version_col="fetch_ts",
-        )
-
-    empty = spark.createDataFrame([], "id string, d date, v int, fetch_ts int")
-    fwd = apply(apply(empty, w_old), w_new)
-    rev = apply(apply(empty, w_new), w_old)
-    assert [(r["id"], r["v"]) for r in fwd.collect()] == [("b", 20)]
-    # even though w_old is processed LAST, its stale value loses to the
-    # stored newer fetch
-    assert [(r["id"], r["v"]) for r in rev.collect()] == [("b", 20)]
-    # default mode on the same inputs is last-processed-wins: the stale
-    # window, processed last, overwrites — exactly the divergence the
-    # version_col contract exists to close
-    rev_default = inc.replace_bounded_window_merge(
-        apply(empty, w_new), w_old, "d", d(2024, 1, 5), d(2024, 1, 5), "id", ["d", "v"],
+    existing = _df(
+        spark,
+        [("a", d(2024, 1, 1), 1), ("m", d(2024, 1, 4), 2), ("n", d(2024, 1, 5), 3)],
     )
-    assert [(r["id"], r["v"]) for r in rev_default.collect()] == [("b", 2)]
+    fresh = _df(spark, [("m", d(2024, 1, 6), 20), ("n", d(2024, 1, 7), 30)])
+    for end in (d(2024, 1, 7), "9999-12-31"):
+        out = inc.replace_bounded_window_merge(
+            existing, fresh, "d", d(2024, 1, 5), end, "id", ["d", "v"]
+        )
+        got = sorted((r["id"], r["d"], r["v"]) for r in out.collect())
+        assert got == [
+            ("a", d(2024, 1, 1), 1),
+            ("m", d(2024, 1, 6), 20),
+            ("n", d(2024, 1, 7), 30),
+        ], end
 
 
 def test_append_if_absent(spark):
@@ -189,48 +176,6 @@ def test_bounded_merge_window_permutations_property(spark):
             assert got == expected, (order, windows)
 
     run()
-
-
-def test_partition_overwrite_merge_equals_relational_merge(spark, tmp_path):
-    """The dynamic-partition-overwrite ST1 path must agree with the
-    relational bounded merge whenever the re-fetch covers every date in its
-    window (which real re-fetches do): only the window's partitions change,
-    rows outside are untouched on disk."""
-    d = dt.date
-    table = str(tmp_path / "txns")
-    stored = _df(
-        spark,
-        [
-            ("a", d(2024, 1, 1), 1),
-            ("b", d(2024, 1, 3), 2),
-            ("c", d(2024, 1, 5), 3),
-            ("d", d(2024, 1, 7), 4),
-        ],
-    )
-    stored.write.partitionBy("d").parquet(table)
-    # re-fetch of [Jan 3, Jan 5]: b updated, c replaced by c2, plus a dupe
-    fresh = _df(
-        spark,
-        [
-            ("b", d(2024, 1, 3), 20),
-            ("b", d(2024, 1, 3), 21),  # dupe id; keep-first by (d, v)
-            ("c2", d(2024, 1, 5), 30),
-        ],
-    )
-    updated = inc.overwrite_window_partitions(
-        spark, table, fresh, "d", d(2024, 1, 3), d(2024, 1, 5), "id", ["d", "v"]
-    )
-    relational = inc.replace_bounded_window_merge(
-        stored, fresh, "d", d(2024, 1, 3), d(2024, 1, 5), "id", ["d", "v"]
-    )
-    got = {(r["id"], r["d"], r["v"]) for r in updated.collect()}
-    want = {(r["id"], r["d"], r["v"]) for r in relational.collect()}
-    assert got == want == {
-        ("a", d(2024, 1, 1), 1),
-        ("b", d(2024, 1, 3), 20),
-        ("c2", d(2024, 1, 5), 30),
-        ("d", d(2024, 1, 7), 4),
-    }
 
 
 def test_apply_changeset_semantics(spark):

@@ -69,8 +69,12 @@ def test_merge_idempotent(spark):
     fresh = spark.createDataFrame(
         [("b", d(2024, 1, 6), 20), ("c", d(2024, 1, 7), 3)], "id string, d date, v int"
     )
-    once = inc.replace_window_merge(existing, fresh, "d", d(2024, 1, 5), "id", ["d", "v"])
-    twice = inc.replace_window_merge(once, fresh, "d", d(2024, 1, 5), "id", ["d", "v"])
+    once = inc.replace_bounded_window_merge(
+        existing, fresh, "d", d(2024, 1, 5), "9999-12-31", "id", ["d", "v"]
+    )
+    twice = inc.replace_bounded_window_merge(
+        once, fresh, "d", d(2024, 1, 5), "9999-12-31", "id", ["d", "v"]
+    )
     assert {tuple(r) for r in once.collect()} == {tuple(r) for r in twice.collect()}
 
 

@@ -31,8 +31,8 @@ def test_streaming_matches_batch(spark, sf_dir):
 
 def test_foreachbatch_incremental_merge(spark, sf_dir, tmp_path):
     """Drive the ST1 replace-window merge from a stream: each micro-batch is
-    spliced into the stored table via replace_window_merge inside
-    foreachBatch."""
+    spliced into the stored table via replace_bounded_window_merge (a
+    window open to the end of time) inside foreachBatch."""
     target = str(tmp_path / "merged")
     d = dt.date
 
@@ -49,8 +49,8 @@ def test_foreachbatch_incremental_merge(spark, sf_dir, tmp_path):
 
     def merge_batch(batch_df, _batch_id):
         stored = batch_df.sparkSession.read.parquet(target)
-        merged = inc.replace_window_merge(
-            stored, batch_df, "d", d(2024, 1, 3), "id", ["d", "v"]
+        merged = inc.replace_bounded_window_merge(
+            stored, batch_df, "d", d(2024, 1, 3), "9999-12-31", "id", ["d", "v"]
         )
         merged.write.mode("overwrite").parquet(target + "_next")
         batch_df.sparkSession.read.parquet(target + "_next").write.mode(
