@@ -2,10 +2,6 @@
 
 Determinism rule (SURVEY.md §4.3): the reference calls ``now()`` everywhere;
 every operator here instead takes an explicit ``as_of`` parameter.
-
-Parity rule: DuckDB's ``date_trunc('month', ts)`` returns DATE, Spark's
-``date_trunc`` returns TIMESTAMP — so period truncation uses ``F.trunc`` /
-``to_date`` to keep both sides DATE-typed.
 """
 
 from __future__ import annotations
@@ -16,27 +12,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 AS_OF_DEFAULT = dt.datetime(2025, 1, 1)  # fixed; testdata spans 2024
-
-
-def month_start(ts: Column) -> Column:
-    return F.trunc(ts, "month")
-
-
-def week_start(ts: Column) -> Column:
-    """ISO-week start (Monday), DATE-typed; DuckDB mirror:
-    date_trunc('week', ts)::date (DuckDB weeks start Monday too)."""
-    return F.to_date(F.date_trunc("week", ts))
-
-
-def day_start(ts: Column) -> Column:
-    return F.to_date(ts)
-
-
-def age_years(birthday: Column, as_of: Column) -> Column:
-    """Age in fractional years via months_between/12 — deterministic calendar
-    arithmetic available in both engines (reference build_customer_master.py:126
-    uses days/365.25; we use datediff/365.25 for exact SQL parity)."""
-    return F.round(F.datediff(as_of, birthday) / 365.25, 2)
 
 
 def as_of_lit(as_of: dt.datetime | None = None) -> Column:

@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-TAX_RATE = 0.0825
-
 # Exactness domains of the fixed-point quantizers, pinned by
 # tests/test_property_money.py (Spark vs pure-python vs DuckDB):
 #
@@ -181,12 +179,3 @@ def guarded_long_sql(expr: str) -> str:
         f"CAST(floor(least(greatest(({expr}), -{GUARDED_LONG_ABS}), "
         f"{GUARDED_LONG_ABS}) + 0.5) AS BIGINT)"
     )
-
-
-def cents_to_dollars(col: Column) -> Column:
-    return col / 100.0
-
-
-def backout_tax(total: Column) -> Column:
-    """pre-tax = total / (1 + rate) (reference pipeline_handler.py:87-89)."""
-    return money(total / (1.0 + TAX_RATE))

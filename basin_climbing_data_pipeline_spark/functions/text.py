@@ -59,19 +59,6 @@ def map_lookup_sql(col_sql: str, mapping: dict[str, str], default: str | None = 
     return f"CASE {col_sql} {branches}{tail} END"
 
 
-def normalize_name(col: Column) -> Column:
-    """lowercase, trim, collapse whitespace, strip non-alpha
-    (reference customer_matching.py:78-101)."""
-    c = F.lower(F.trim(col))
-    c = F.regexp_replace(c, r"[^a-z\s]", "")
-    return F.regexp_replace(c, r"\s+", " ")
-
-
-NORMALIZE_NAME_SQL = (
-    "regexp_replace(regexp_replace(lower(trim({c})), '[^a-z\\s]', '', 'g'), '\\s+', ' ', 'g')"
-)
-
-
 def normalize_email(col: Column) -> Column:
     """lowercase + trim (reference customer_matching.py:19-38)."""
     return F.lower(F.trim(col))

@@ -71,16 +71,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every catalog table as a temp view for spark.sql queries."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """Overwrite-sink analog of the reference's full-table CSV overwrite
     (reference data_pipeline/upload_data.py:37-46), as parquet with optional

@@ -13,6 +13,12 @@ window (ST3).  Here the same semantics run on real Structured Streaming:
 - exactly-once-ish dedup on append (ST4) via ``dropDuplicates`` before the
   windowed aggregation
 
+Every query in the package (these, ``stateful.py`` and
+``foreach_merge.merge_stream``) runs through one runner: :func:`_drain`
+pins the shuffle partitions, starts the query with ``availableNow`` and
+drains it fail-loud; :func:`to_memory` builds on it for the memory sink and
+hands back the result detached from the sink.
+
 At scale the same code runs continuously against a growing partitioned
 prefix with checkpointing; ``foreachBatch`` + MERGE is the upsert path for
 the reference's replace-window merges (ST1).
@@ -47,43 +53,52 @@ EVENTS_NANOS_SCHEMA = (
 STREAM_SHUFFLE_PARTITIONS = 4
 
 
-class _stream_partitions:
-    """Temporarily pin spark.sql.shuffle.partitions for a streaming query
-    (the value is baked into the query's state layout at start).
-
-    ``n`` overrides the family default for operators with a different
-    cost profile: the stateful sessionizers (stateful.py) are bounded by
-    per-group PYTHON time, not per-store overhead, so they run more
-    partitions than the state-store-bound windowed aggregations
-    (measured round 12: flush sessionizer 4.97 s at 4 -> 3.89 s at 8,
-    back up to 6.98 s at 32)."""
-
-    def __init__(self, spark: SparkSession, n: int | None = None):
-        self.spark = spark
-        self.n = n if n is not None else STREAM_SHUFFLE_PARTITIONS
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
-
-
 def _await_finished(q, timeout: int = 300) -> None:
     """Drain an availableNow query; FAIL LOUD on timeout.
 
     ``awaitTermination(timeout=...)`` returns False while the query is
     still running — ignoring that and reading the sink would return a
     partial, wrong-but-plausible result (worst failure mode for a
-    value-hashed oracle entry).  Every foreachBatch/memory-sink helper in
-    this package must come through here."""
+    value-hashed oracle entry).  Only :func:`_drain` calls it, and every
+    query in this package starts through :func:`_drain`."""
     if not q.awaitTermination(timeout=timeout):
         q.stop()
         raise RuntimeError(
             f"streaming query {q.name or q.id} still running after {timeout}s"
         )
+
+
+def _drain(writer, spark: SparkSession, partitions: int = STREAM_SHUFFLE_PARTITIONS):
+    """The one stream runner: start a configured ``DataStreamWriter`` with
+    ``availableNow`` and drain it through :func:`_await_finished`, with
+    ``spark.sql.shuffle.partitions`` pinned to ``partitions`` (the value is
+    baked into the query's state layout at start) and restored however
+    the query ends.  Returns the finished query."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        q = writer.trigger(availableNow=True).start()
+        _await_finished(q)
+        return q
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def to_memory(
+    df: DataFrame, output_mode: str, partitions: int = STREAM_SHUFFLE_PARTITIONS
+) -> DataFrame:
+    """Drain a streaming frame into a memory sink under a unique name and
+    return the result detached from the sink: checkpointed (its blocks
+    are freed with the frame) and the sink's view dropped, so per-call
+    sink tables do not pile up in driver memory over a registry session."""
+    spark = df.sparkSession
+    sink = f"stream_{uuid.uuid4().hex[:12]}"
+    writer = df.writeStream.outputMode(output_mode).format("memory").queryName(sink)
+    try:
+        _drain(writer, spark, partitions)
+        return spark.table(sink).localCheckpoint()
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,21 +144,7 @@ def windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    sink = f"stream_counts_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        _await_finished(q)
-    # detach from the memory sink (checkpoint + drop view) so per-call sink
-    # tables don't accumulate in driver memory across a registry session
-    result = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return result.orderBy("window_start_us", "event_type")
+    return to_memory(agg, "complete").orderBy("window_start_us", "event_type")
 
 
 def sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,21 +170,7 @@ def sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    sink = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        _await_finished(q)
-    # detach from the memory sink (checkpoint + drop view) so per-call sink
-    # tables don't accumulate in driver memory across a registry session
-    result = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return result.orderBy("window_start_us", "event_type")
+    return to_memory(agg, "complete").orderBy("window_start_us", "event_type")
 
 
 def sliding_event_counts_sql() -> str:
@@ -260,19 +247,7 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n_unique_users"))
-    sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        _await_finished(q)
-    result = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return result.orderBy("event_type")
+    return to_memory(agg, "complete").orderBy("event_type")
 
 
 def streaming_dedup_counts_sql() -> str:
@@ -328,19 +303,7 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_event_id",
         (F.unix_micros("purchase_ts") - F.unix_micros("view_ts")).alias("gap_us"),
     )
-    sink = f"stream_attr_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            joined.writeStream.trigger(availableNow=True)
-            .outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        _await_finished(q)
-    result = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return result.orderBy("user_id", "view_event_id", "purchase_event_id")
+    return to_memory(joined, "append").orderBy("user_id", "view_event_id", "purchase_event_id")
 
 
 def streaming_attribution_join_sql() -> str:
@@ -397,19 +360,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    sink = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        _await_finished(q)
-    result = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return result.orderBy("window_start_us", "segment")
+    return to_memory(agg, "complete").orderBy("window_start_us", "segment")
 
 
 def streaming_static_enrichment_sql() -> str:
@@ -448,39 +399,34 @@ def _aes_keyed(df: DataFrame) -> DataFrame:
     )
 
 
-def streaming_weighted_sample(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def streaming_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-proportional sample of the event stream, maintained
-    incrementally: each micro-batch's A-ES top-K
-    (:data:`STREAM_RESERVOIR_K` best ``ln(u)/w`` keys) is folded into the
-    retained top-K via ``foreachBatch``.  Because top-K under a total
-    order is associative and commutative, the final state equals the
-    batch computation over all events REGARDLESS of micro-batch
-    boundaries — the fold-equals-batch property the SQL oracle checks
-    end-to-end and ``test_streaming.py`` proves across a 3-file split.
-    This is the streaming form of
+    incrementally: :func:`weighted_sample_fold` over :func:`stream_events`."""
+    return weighted_sample_fold(stream_events(spark, sf_dir))
+
+
+def weighted_sample_fold(events: DataFrame) -> DataFrame:
+    """Fold a streaming events frame into its weighted sample: each
+    micro-batch's A-ES top-K (:data:`STREAM_RESERVOIR_K` best ``ln(u)/w``
+    keys) is folded into the retained top-K via ``foreachBatch``.  Because
+    top-K under a total order is associative and commutative, the final
+    state equals the batch computation over all events REGARDLESS of
+    micro-batch boundaries — the fold-equals-batch property the SQL oracle
+    checks end-to-end and ``test_streaming.py`` proves across a 3-file
+    split.  This is the streaming form of
     :func:`~..operators.sampling.weighted_reservoir_sample` — a
     sequential reservoir needs per-row state; the A-ES key turns it into
     a stateless shuffle-free fold.
 
-    State is K rows (localCheckpointed per batch, bounded driver memory);
-    at production scale the same fold writes a K-row table per batch —
-    state volume is K, independent of stream length."""
-    stream = stream_events(spark, sf_dir)
-    if max_files_per_trigger is not None:
-        # re-read with a per-trigger file cap (test hook for multi-batch folds)
-        from ..io import normalize_event_ts
+    The caller owns the source, as for
+    :func:`~.stateful.sessionize_stream_with_timeout`, so micro-batch
+    boundaries stay controllable.  State is K rows (localCheckpointed per
+    batch, bounded driver memory); at production scale the same fold
+    writes a K-row table per batch — state volume is K, independent of
+    stream length."""
+    from pyspark.sql import Window
 
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events*.parquet")
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .parquet(sf_dir)
-        )
-        stream = normalize_event_ts(raw)
-    keyed = _aes_keyed(stream)
+    spark = events.sparkSession
     state: dict[str, DataFrame] = {}
 
     def fold(batch_df: DataFrame, _batch_id: int) -> None:
@@ -496,17 +442,13 @@ def streaming_weighted_sample(
             .localCheckpoint()
         )
 
-    with _stream_partitions(spark):
-        q = keyed.writeStream.trigger(availableNow=True).foreachBatch(fold).start()
-        _await_finished(q)
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("key_nano"), F.asc("event_id"))
+    _drain(_aes_keyed(events).writeStream.foreachBatch(fold), spark)
     final = state.get("df")
     if final is None:
         return spark.createDataFrame(
             [], "rank int, event_id long, weight double, sel_key double"
         )
+    w = Window.orderBy(F.desc("key_nano"), F.asc("event_id"))
     return (
         final.withColumn("rank", F.row_number().over(w))
         .select(
@@ -582,19 +524,7 @@ def streaming_value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    sink = f"stream_psi_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        _await_finished(q)
-    counts = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return _drift_psi_over_window_counts(counts)
+    return _drift_psi_over_window_counts(to_memory(agg, "complete"))
 
 
 def streaming_value_drift_psi_sql() -> str:
@@ -642,18 +572,7 @@ def streaming_window_distinct_users(spark: SparkSession, sf_dir: str) -> DataFra
     regs = rows.groupBy("wd", "event_type", "bucket").agg(
         F.max("rho").alias("max_rho")
     )
-    sink = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            regs.writeStream.trigger(availableNow=True)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        _await_finished(q)
-    reg_rows = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
+    reg_rows = to_memory(regs, "complete")
     scaled = _hll_scaled_registers(
         reg_rows.select(
             F.unix_micros(F.col("wd.start")).alias("window_start_us"),
@@ -775,18 +694,7 @@ def streaming_benford_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = digits.groupBy("wd", "d").agg(F.count("*").alias("n_obs")).select(
         F.unix_micros(F.col("wd.start")).alias("window_start_us"), "d", "n_obs"
     )
-    sink = f"stream_benford_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        _await_finished(q)
-    counts = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
+    counts = to_memory(agg, "complete")
     ww = Window.partitionBy("window_start_us")
     benford = F.element_at(
         F.array(*[F.lit(b / 1_000_000.0) for b in BENFORD_MICRO]),
@@ -875,8 +783,6 @@ def streaming_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same availableNow → memory-sink shape as the other stream entries;
     oracle = the identical batch computation (epoch-aligned windows)."""
-    from pyspark.sql import Window
-
     stream = stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
     agg = (
         stream.groupBy(
@@ -890,19 +796,7 @@ def streaming_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    sink = f"stream_jsd_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        _await_finished(q)
-    counts = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return _jsd_over_window_counts(counts)
+    return _jsd_over_window_counts(to_memory(agg, "complete"))
 
 
 def _jsd_over_window_counts(counts):

@@ -14,7 +14,11 @@ version directory ``target_dir/v<k>`` and the newest version on disk is
 the table (the write-new-then-swap discipline).  A batch reads the newest
 version below its own id, so a restarted stream resumes from what the
 last run stored, and a batch re-run after a crash between its write and
-its checkpoint commit never reads the directory it overwrites.
+its checkpoint commit never reads the directory it overwrites.  Having
+read version ``prev``, batch ``k`` deletes every version older than
+``prev``, so at most two versions stay on disk: ``prev`` for a re-run of
+batch ``k``, and ``v<k>``.  The query starts and drains through
+``events_stream._drain``, like every stream in the package.
 
 Differential contract (tests/test_foreachbatch_merge.py): streaming the
 events table as overlapping window files through this sink equals the batch
@@ -25,13 +29,14 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import normalize_event_ts
 from ..operators.incremental import replace_bounded_window_merge
-from .events_stream import _await_finished, _stream_partitions
+from .events_stream import EVENTS_NANOS_SCHEMA, _drain
 
 _VERSION_DIR = re.compile(r"v(\d+)")
 
@@ -57,12 +62,7 @@ def merge_stream(
     has_files = os.path.isdir(source_dir) and any(
         f.endswith(".parquet") for f in os.listdir(source_dir)
     )
-    if has_files:
-        schema = spark.read.parquet(source_dir).schema
-    else:
-        from .events_stream import EVENTS_NANOS_SCHEMA
-
-        schema = EVENTS_NANOS_SCHEMA
+    schema = spark.read.parquet(source_dir).schema if has_files else EVENTS_NANOS_SCHEMA
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -77,6 +77,9 @@ def merge_stream(
         "value",
     )
 
+    def version(k: int) -> str:
+        return os.path.join(target_dir, f"v{k}")
+
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         # one scalar pair per micro-batch on the driver — foreachBatch runs
         # driver-side by contract; at scale this comes from file metadata
@@ -89,7 +92,7 @@ def merge_stream(
         if prev is None:
             existing = spark.createDataFrame([], batch_df.schema)
         else:
-            existing = spark.read.parquet(prev)
+            existing = spark.read.parquet(version(prev))
         merged = replace_bounded_window_merge(
             existing,
             batch_df,
@@ -99,29 +102,36 @@ def merge_stream(
             "event_id",
             ["ts_us", "event_id"],
         )
-        merged.write.mode("overwrite").parquet(os.path.join(target_dir, f"v{batch_id}"))
+        merged.write.mode("overwrite").parquet(version(batch_id))
+        if prev is not None:
+            # this batch runs only after prev's batch committed, so no
+            # (re-)run reads a version older than prev again; prev itself
+            # stays for a re-run of this batch
+            for k in _version_ids(target_dir):
+                if k < prev:
+                    shutil.rmtree(version(k))
 
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(target_dir, "_chk"))
-            .queryName(sink_name)
-            .start()
-        )
-        _await_finished(q)
+    _drain(
+        stream.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", os.path.join(target_dir, "_chk"))
+        .queryName(sink_name),
+        spark,
+    )
     newest = _newest_version(target_dir)
     if newest is None:
         return spark.createDataFrame([], stream.schema)
-    return spark.read.parquet(newest)
+    return spark.read.parquet(version(newest))
 
 
-def _newest_version(target_dir: str, below: float = float("inf")) -> str | None:
-    """Path of the ``v<k>`` version directory under ``target_dir`` with the
-    largest batch id ``k < below``, or None.  Ids compare as integers: as
-    text, ``v10`` sorts before ``v9``."""
+def _version_ids(target_dir: str) -> list[int]:
+    """Batch ids ``k`` of the ``v<k>`` version directories under
+    ``target_dir``."""
     if not os.path.isdir(target_dir):
-        return None
-    ids = [int(m[1]) for m in map(_VERSION_DIR.fullmatch, os.listdir(target_dir)) if m]
-    ids = [k for k in ids if k < below]
-    return os.path.join(target_dir, f"v{max(ids)}") if ids else None
+        return []
+    return [int(m[1]) for m in map(_VERSION_DIR.fullmatch, os.listdir(target_dir)) if m]
+
+
+def _newest_version(target_dir: str, below: float = float("inf")) -> int | None:
+    """The largest version id ``k < below`` under ``target_dir``, or None.
+    Ids compare as integers: as text, ``v10`` sorts before ``v9``."""
+    return max((k for k in _version_ids(target_dir) if k < below), default=None)

@@ -8,6 +8,10 @@ carried across micro-batches, emitted when the gap exceeds the session
 timeout.  This is the Structured Streaming analog of the reference's
 hand-rolled sessionish windows (SURVEY.md §2.9 ST6).
 
+Both driver-checked sessionizers drain through ``events_stream.to_memory``
+at :func:`_stateful_stream_partitions` shuffle partitions;
+:func:`sessionize_stream_with_timeout` only wires a caller-owned stream.
+
 Correctness contract (tested in tests/test_streaming.py): for a finite
 input replayed with availableNow, emitted closed sessions + the final open
 sessions equal the batch sessionizer's output.
@@ -15,14 +19,13 @@ sessions equal the batch sessionizer's output.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .events_stream import stream_events
+from .events_stream import stream_events, to_memory
 
 SESSION_GAP_US = 1800 * 1_000_000
 
@@ -35,30 +38,21 @@ SESSION_GAP_US = 1800 * 1_000_000
 # extra partition pays fixed state-store + Arrow-worker cost per
 # micro-batch while the Python work parallelizes, and past cores/4 the
 # fixed cost dominates.  Derived, not a literal (round-12 verdict order
-# #5): cores/4 with the measured-best 8 as a floor, env-overridable like
-# the AQE floor.  On a cluster the same rule applies until the partition
-# count approaches the active-key volume (one group per partition is the
-# useful maximum) — cap there when keys are scarce.
+# #5): cores/4 with the measured-best 8 as a floor.  On a cluster the same
+# rule applies until the partition count approaches the active-key volume
+# (one group per partition is the useful maximum) — cap there when keys
+# are scarce.
 STATEFUL_STREAM_PARTITIONS_FLOOR = 8
 
 
 def _stateful_stream_partitions(spark: SparkSession) -> int:
-    """Shuffle partitions for the stateful queries: the
-    ``SPARK_GRAFT_STATEFUL_STREAM_PARTITIONS`` override (an integer >= 1),
-    else cores/4 floored at ``STATEFUL_STREAM_PARTITIONS_FLOOR``.  The value
-    only applies to fresh checkpoints: a query resuming a checkpoint keeps
-    the partition count recorded there."""
-    var = "SPARK_GRAFT_STATEFUL_STREAM_PARTITIONS"
-    env = os.environ.get(var)
-    if env:
-        n = int(env) if env.strip().isdigit() else 0
-        if n < 1:
-            raise ValueError(f"{var} must be an integer >= 1, got {env!r}")
-        return n
+    """Shuffle partitions for the stateful queries: cores/4 floored at
+    ``STATEFUL_STREAM_PARTITIONS_FLOOR``."""
     return max(
         STATEFUL_STREAM_PARTITIONS_FLOOR,
         spark.sparkContext.defaultParallelism // 4,
     )
+
 
 OUTPUT_SCHEMA = (
     "customer_id long, session_start_us long, session_end_us long, n_events long, "
@@ -104,7 +98,7 @@ def _sessionize(key, pdfs: Iterator, state: GroupState):
         )
 
 
-def streaming_sessions(spark: SparkSession, sf_dir: str, sink_name: str) -> DataFrame:
+def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stateful sessionizer over the events stream with availableNow;
     returns the emitted (closed) sessions from the memory sink."""
     stream = stream_events(spark, sf_dir).select(
@@ -117,23 +111,7 @@ def streaming_sessions(spark: SparkSession, sf_dir: str, sink_name: str) -> Data
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    from .events_stream import _await_finished, _stream_partitions
-
-    with _stream_partitions(spark, _stateful_stream_partitions(spark)):
-        q = (
-            out.writeStream.trigger(availableNow=True)
-            .outputMode("append")
-            .format("memory")
-            .queryName(sink_name)
-            .start()
-        )
-        _await_finished(q)
-    # detach the result from the memory sink so the per-call sink table
-    # doesn't accumulate in driver memory for the rest of the session:
-    # checkpoint (blocks are GC-cleaned with the DataFrame) then drop the view
-    result = spark.table(sink_name).localCheckpoint()
-    spark.catalog.dropTempView(sink_name)
-    return result
+    return to_memory(out, "append", _stateful_stream_partitions(spark))
 
 
 def _sessionize_timeout(key, pdfs: Iterator, state: GroupState):
@@ -231,11 +209,7 @@ def streaming_sessions_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     input: every event keyed by user) MINUS each customer's last session.
     Proves the ``applyInPandasWithState`` path agrees with the batch
     lag+cumsum path on real data, not just the pytest fixtures."""
-    import uuid
-
-    sink = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    out = streaming_sessions(spark, sf_dir, sink)
-    return out.select(
+    return streaming_sessions(spark, sf_dir).select(
         "customer_id", "session_start_us", "session_end_us", "n_events"
     ).orderBy("customer_id", "session_start_us")
 
@@ -275,27 +249,11 @@ def streaming_sessions_flush_query(spark: SparkSession, sf_dir: str) -> DataFram
     oracle reproduces.  (On a multi-file/continuous source, mid-stream
     watermark advances make emission timing arrival-dependent — that
     regime is covered by the scenario test, not an oracle.)"""
-    import uuid
-
-    sink = f"stream_sess_flush_{uuid.uuid4().hex[:8]}"
     src = stream_events(spark, sf_dir).select(
         F.col("user_id").alias("customer_id"), "ts"
     )
     out = sessionize_stream_with_timeout(src, watermark_delay=FLUSH_WATERMARK)
-    from .events_stream import _await_finished, _stream_partitions
-
-    with _stream_partitions(spark, _stateful_stream_partitions(spark)):
-        q = (
-            out.writeStream.trigger(availableNow=True)
-            .outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        _await_finished(q)
-    result = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return result.select(
+    return to_memory(out, "append", _stateful_stream_partitions(spark)).select(
         "customer_id", "session_start_us", "session_end_us", "n_events", "is_final"
     ).orderBy("customer_id", "session_start_us")
 

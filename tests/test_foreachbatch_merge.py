@@ -116,6 +116,25 @@ def test_merge_stream_starts_on_empty_source_dir(spark, tmp_path):
     assert merged.count() == 0
 
 
+T0_NANOS = 1_704_067_200_000_000_000  # 2024-01-01 00:00 UTC in nanos
+
+
+def _land(spark, tmp_path, src, name, rows, mtime=None):
+    """Land one window file ``src/<name>.parquet`` of (event_id, day)
+    rows; ``mtime`` fixes its place in the file source's arrival order."""
+    import os
+
+    spark.createDataFrame(
+        [(i, T0_NANOS + day * 86_400_000_000_000, 7, "visit", 1.0) for i, day in rows],
+        "event_id long, ts long, user_id long, event_type string, value double",
+    ).coalesce(1).write.parquet(str(tmp_path / name))
+    (part,) = [f for f in os.listdir(tmp_path / name) if f.endswith(".parquet")]
+    dst = os.path.join(src, f"{name}.parquet")
+    os.rename(os.path.join(tmp_path, name, part), dst)
+    if mtime is not None:
+        os.utime(dst, (mtime, mtime))
+
+
 def test_merge_stream_resumes_from_the_stored_version(spark, tmp_path):
     """The merged table survives a restart on the same target: a second
     call with no new files returns the stored table, and a window landed
@@ -124,21 +143,37 @@ def test_merge_stream_resumes_from_the_stored_version(spark, tmp_path):
 
     src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
     os.makedirs(src)
-    t0 = 1_704_067_200_000_000_000  # 2024-01-01 00:00 UTC in nanos
-
-    def land(name, rows):
-        spark.createDataFrame(
-            [(i, t0 + day * 86_400_000_000_000, 7, "visit", 1.0) for i, day in rows],
-            "event_id long, ts long, user_id long, event_type string, value double",
-        ).coalesce(1).write.parquet(str(tmp_path / name))
-        (part,) = [f for f in os.listdir(tmp_path / name) if f.endswith(".parquet")]
-        os.rename(os.path.join(tmp_path, name, part), os.path.join(src, f"{name}.parquet"))
 
     def ids(sink):
         return sorted(r["event_id"] for r in merge_stream(spark, src, tgt, sink).collect())
 
-    land("w0", [(1, 0), (2, 1)])
+    _land(spark, tmp_path, src, "w0", [(1, 0), (2, 1)])
     assert ids("resume_a") == [1, 2]
     assert ids("resume_b") == [1, 2]  # no new files: the stored table stands
-    land("w1", [(3, 4)])
+    _land(spark, tmp_path, src, "w1", [(3, 4)])
     assert ids("resume_c") == [1, 2, 3]
+
+
+def test_merge_stream_keeps_at_most_two_versions(spark, tmp_path):
+    """Every micro-batch writes a full version ``v<k>`` of the merged
+    table; superseded versions are deleted, so a replay of four windows
+    (four batches) leaves at most two on disk, and the merged rows are
+    those of the full replay."""
+    import os
+    import re
+
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    os.makedirs(src)
+    # overlapping 2-day windows; id 2 moves from day 1 to day 2 in w1
+    windows = [[(1, 0), (2, 1)], [(2, 2), (3, 3)], [(3, 3), (4, 4)], [(5, 5), (6, 6)]]
+    for k, rows in enumerate(windows):
+        _land(spark, tmp_path, src, f"w{k}", rows, mtime=1_000 * (k + 1))
+
+    merged = merge_stream(spark, src, tgt, "prune_sink")
+    got = sorted((r["event_id"], str(r["event_date"])) for r in merged.collect())
+    assert got == [
+        (1, "2024-01-01"), (2, "2024-01-03"), (3, "2024-01-04"),
+        (4, "2024-01-05"), (5, "2024-01-06"), (6, "2024-01-07"),
+    ]
+    versions = [d for d in os.listdir(tgt) if re.fullmatch(r"v\d+", d)]
+    assert 1 <= len(versions) <= 2, sorted(versions)

@@ -57,8 +57,7 @@ def test_foreachbatch_incremental_merge(spark, sf_dir, tmp_path):
             "overwrite"
         ).parquet(target)
 
-    q = stream.writeStream.trigger(availableNow=True).foreachBatch(merge_batch).start()
-    q.awaitTermination(timeout=300)
+    st._drain(stream.writeStream.foreachBatch(merge_batch), spark)
 
     final = spark.read.parquet(target)
     ids = {r["id"] for r in final.collect()}
@@ -76,7 +75,7 @@ def test_stateful_sessionizer_matches_batch(spark, sf_dir):
 
     streamed = {
         (r["customer_id"], r["session_start_us"], r["session_end_us"], r["n_events"])
-        for r in streaming_sessions(spark, sf_dir, "sess_eq_test").collect()
+        for r in streaming_sessions(spark, sf_dir).collect()
     }
     batch = checkin_sessions(spark, sf_dir)
     from pyspark.sql import Window
@@ -252,19 +251,16 @@ def test_dedup_within_watermark_state_survives_across_batches(spark, tmp_path):
         .agg(F.count("*").alias("n"))
     )
     sink = f"dedup_xbatch_{uuid.uuid4().hex[:8]}"
-    with st._stream_partitions(spark):
-        q = (
-            deduped.writeStream.trigger(availableNow=True)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", str(tmp_path / "chk"))
-            .start()
-        )
-        # two micro-batches must actually have run for the test to mean
-        # anything — otherwise the dedup would be trivially within-batch
-        q.awaitTermination(timeout=300)
-        n_batches = len(q.recentProgress)
+    q = st._drain(
+        deduped.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(sink)
+        .option("checkpointLocation", str(tmp_path / "chk")),
+        spark,
+    )
+    # two micro-batches must actually have run for the test to mean
+    # anything — otherwise the dedup would be trivially within-batch
+    n_batches = len(q.recentProgress)
     rows = {r["event_type"]: r["n"] for r in spark.table(sink).collect()}
     spark.catalog.dropTempView(sink)
     assert n_batches >= 2, f"expected >=2 micro-batches, got {n_batches}"
@@ -282,9 +278,10 @@ def test_streaming_weighted_sample_fold_equals_batch(spark, sf_dir, tmp_path):
 
     import pandas as pd
 
+    from basin_climbing_data_pipeline_spark.io import normalize_event_ts
     from basin_climbing_data_pipeline_spark.streaming.events_stream import (
         STREAM_RESERVOIR_K,
-        streaming_weighted_sample,
+        weighted_sample_fold,
     )
 
     ev = pd.read_parquet(f"{sf_dir}/events.parquet")
@@ -292,9 +289,13 @@ def test_streaming_weighted_sample_fold_equals_batch(spark, sf_dir, tmp_path):
     for i, name in enumerate(names):
         ev.iloc[i::3].to_parquet(tmp_path / name)
 
-    got = streaming_weighted_sample(
-        spark, str(tmp_path), max_files_per_trigger=1
-    ).collect()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    stream = normalize_event_ts(
+        spark.readStream.schema(spark.read.parquet(str(tmp_path)).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path))
+    )
+    got = weighted_sample_fold(stream).collect()
 
     scored = []
     for r in ev.itertuples():
@@ -370,20 +371,43 @@ def test_await_finished_passes_through_on_drain():
     st._await_finished(FakeQuery(), timeout=1)
 
 
-def test_stateful_stream_partitions_env_is_validated(spark, monkeypatch):
-    """The partition override is an integer >= 1; anything else fails with
-    an error naming the variable, not a bare int() ValueError."""
+def test_stream_runner_leaves_nothing_behind(spark, sf_dir):
+    """After a drain the runner leaves no memory-sink view, no active
+    query and the session's shuffle partitions as they were — also when
+    a micro-batch raises, which must reach the caller."""
     import pytest
+    from pyspark.errors import StreamingQueryException
 
-    from basin_climbing_data_pipeline_spark.streaming.stateful import _stateful_stream_partitions
+    def sink_views():
+        return [
+            t.name for t in spark.catalog.listTables()
+            if t.isTemporary and t.name.startswith("stream_")
+        ]
 
-    var = "SPARK_GRAFT_STATEFUL_STREAM_PARTITIONS"
-    monkeypatch.setenv(var, "12")
-    assert _stateful_stream_partitions(spark) == 12
-    for bad in ("eight", "0", "-3", "2.5"):
-        monkeypatch.setenv(var, bad)
-        with pytest.raises(ValueError, match=var):
-            _stateful_stream_partitions(spark)
+    def boom(v):
+        raise ValueError("batch failed")
+
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        counts = st.to_memory(
+            st.stream_events(spark, sf_dir).groupBy("event_type").count(), "complete"
+        )
+        assert counts.count() > 0
+        assert sink_views() == []
+        assert spark.streams.active == []
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+
+        failing = st.stream_events(spark, sf_dir).select(
+            F.udf(boom, "long")("event_id").alias("x")
+        )
+        with pytest.raises(StreamingQueryException, match="batch failed"):
+            st.to_memory(failing, "append")
+        assert sink_views() == []
+        assert spark.streams.active == []
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
 
 
 def test_streaming_value_drift_psi_matches_batch(spark, sf_dir):
@@ -464,10 +488,6 @@ def test_stateful_timeout_sessionizer_late_data_straddling_watermark(spark, tmp_
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from basin_climbing_data_pipeline_spark.streaming.events_stream import (
-        _await_finished,
-        _stream_partitions,
-    )
     from basin_climbing_data_pipeline_spark.streaming.stateful import (
         sessionize_stream_with_timeout,
     )
@@ -516,22 +536,12 @@ def test_stateful_timeout_sessionizer_late_data_straddling_watermark(spark, tmp_
         .parquet(str(d))
     )
     out = sessionize_stream_with_timeout(stream)
-    with _stream_partitions(spark):
-        q = (
-            out.writeStream.trigger(availableNow=True)
-            .outputMode("append")
-            .format("memory")
-            .queryName("sess_timeout_test")
-            .start()
-        )
-        _await_finished(q)
     got = {
         tuple(r)
-        for r in spark.table("sess_timeout_test")
+        for r in st.to_memory(out, "append")
         .select("customer_id", "session_start_us", "session_end_us", "n_events", "is_final")
         .collect()
     }
-    spark.catalog.dropTempView("sess_timeout_test")
     _sh.rmtree(str(d))
 
     want = {

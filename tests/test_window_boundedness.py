@@ -44,7 +44,7 @@ RESERVOIR = "bounded reservoir (≤ K rows, re-limited per micro-batch)"
 # (module-relative path, enclosing function) -> (
 #     n_global_orderBy, n_empty_partitionBy, bounding argument)
 ALLOWLIST: dict[tuple[str, str], tuple[int, int, str]] = {
-    ("streaming/events_stream.py", "streaming_weighted_sample"): (1, 0, RESERVOIR),
+    ("streaming/events_stream.py", "weighted_sample_fold"): (1, 0, RESERVOIR),
     ("operators/sampling.py", "temperature_mixture_weights"): (0, 1, SRC),
     ("operators/sampling.py", "stratified_sample_alloc"): (1, 0, SRC),
     ("operators/sampling.py", "weighted_reservoir_sample"): (1, 0, TOPK),
